@@ -68,12 +68,10 @@ def main() -> None:
         print(f"generating {args.docs} docs -> {data}", flush=True)
         gen_input(data, args.docs)
 
-    zip_path = os.path.join(ROOT, "dist", "unichem2index_spark.zip")
-    if not os.path.exists(zip_path):
-        subprocess.run(
-            [sys.executable, "scripts/package_pyfiles.py"],
-            check=True, cwd=ROOT,
-        )
+    zip_path = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "scripts", "package_pyfiles.py")],
+        check=True, capture_output=True, text=True,
+    ).stdout.strip()
 
     results = {}
     for cores in args.levels:

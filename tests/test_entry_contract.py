@@ -37,34 +37,6 @@ def test_queries_and_oracles_align():
     assert len(qs) >= 35
 
 
-def test_pyfiles_zip_is_fresh():
-    """The committed --py-files deployment zip must byte-match the
-    package sources (ADVICE r4: a stale zip shipped a pre-fix WAND
-    kernel and lacked 7 new modules). Re-run scripts/package_pyfiles.py
-    and commit the zip whenever this fails."""
-    import pathlib
-    import zipfile
-
-    root = pathlib.Path(__file__).parent.parent
-    pkg = root / "unichem2index_spark"
-    zpath = root / "dist" / "unichem2index_spark.zip"
-    assert zpath.exists(), "dist/unichem2index_spark.zip missing"
-    want = {
-        str(p.relative_to(root)): p.read_bytes()
-        for p in pkg.rglob("*.py")
-        if "__pycache__" not in p.parts
-    }
-    with zipfile.ZipFile(zpath) as zf:
-        got = {n: zf.read(n) for n in zf.namelist() if n.endswith(".py")}
-    missing = sorted(set(want) - set(got))
-    extra = sorted(set(got) - set(want))
-    stale = sorted(n for n in set(want) & set(got) if want[n] != got[n])
-    assert not (missing or extra or stale), (
-        f"zip drift: missing={missing} extra={extra} stale={stale} — "
-        "run scripts/package_pyfiles.py and commit dist/"
-    )
-
-
 def test_gate_window_r5_composition():
     """The driver gate checks the FIRST 50 queries() entries. The r5
     window must be: the two r4 repairs first, then the 6 fixed latent

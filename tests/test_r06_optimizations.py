@@ -40,7 +40,8 @@ def test_minhash_pairs_unique_with_exact_band_counts(spark):
         .select("doc_id", "source", "text")
     )
     t = {"documents": docs}
-    rows = minhash_lsh_pairs(spark, t, threshold=0.8).collect()
+    pairs_df = minhash_lsh_pairs(spark, t, threshold=0.8)
+    rows = pairs_df.collect()
     pairs = [(r.doc_a, r.doc_b) for r in rows]
     # exactly-once emission: no duplicate candidate pair survives
     assert len(pairs) == len(set(pairs))
@@ -68,11 +69,9 @@ def test_minhash_pairs_unique_with_exact_band_counts(spark):
         )
         assert r.n_bands >= 1
 
-    rows_ref = getattr(
-        minhash_lsh_pairs(spark, t, threshold=0.8), "_u2i_persisted", None
-    )
-    if rows_ref is not None:
-        rows_ref.unpersist()
+    persisted = getattr(pairs_df, "_u2i_persisted", None)
+    if persisted is not None:
+        persisted.unpersist()
 
 
 def test_serving_shard_kernel_not_coalesced_to_one_task(spark, tmp_path):

@@ -97,6 +97,17 @@ def test_updated_query_matches_oracle(spark, updated_index):
         full = oracle.topk(terms, k + len(deleted))
         exp = [(d, round(s, 6)) for d, s in full if d not in deleted][:k]
         assert got == exp, f"query {terms} k={k}"
+        got_ms = [
+            (r.doc_id, r.score)
+            for r in Q.bm25_topk_maxscore(spark, handle, terms, k).collect()
+        ]
+        assert got_ms == exp, f"maxscore {terms} k={k}"
+        batch = [{"query_id": 0, "terms": terms, "k": k}]
+        got_batch = [
+            (r.doc_id, r.score)
+            for r in Q.bm25_topk_batch(spark, handle, batch).collect()
+        ]
+        assert got_batch == exp, f"batch {terms} k={k}"
 
 
 def test_compact_equals_fresh_build(spark, updated_index, tmp_path_factory):

@@ -44,19 +44,6 @@ def minhash_sig(token_ids: set[int]) -> list[int]:
     ]
 
 
-def simhash16(token_counts: dict[int, int]) -> int:
-    """Pure-Python oracle 16-bit SimHash over {token_id: count}."""
-    bits = 0
-    for j, p in enumerate(SIMHASH_P):
-        acc = 0
-        for x, c in token_counts.items():
-            v = 1 if ((x + 1) * p) % MOD >= MOD // 2 else -1
-            acc += c * v
-        if acc > 0:
-            bits |= 1 << j
-    return bits
-
-
 def fingerprint(token_ids_in_order: list[int]) -> int:
     """Pure-Python oracle position-weighted document fingerprint."""
     s = sum((pos + 1) * (tid + 1) for pos, tid in enumerate(token_ids_in_order))

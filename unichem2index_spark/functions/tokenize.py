@@ -48,8 +48,3 @@ def tokens_col(col: Column | str) -> Column:
 def tokenize_udf(texts: pd.Series) -> pd.Series:
     """Arrow-vectorized tokenizer, byte-identical to :func:`tokenize`."""
     return texts.map(tokenize)
-
-
-def duckdb_tokens_expr(col: str = "text") -> str:
-    """DuckDB SQL expression producing the identical token list."""
-    return f"regexp_extract_all(lower({col}), '{TOKEN_PATTERN}')"

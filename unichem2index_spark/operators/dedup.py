@@ -170,11 +170,6 @@ def minhash_signatures_from_ids(ids: DataFrame) -> DataFrame:
     return ids.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(d: DataFrame) -> DataFrame:
-    """doc_id, m0..m15 — MinHash over distinct-token sets."""
-    return minhash_signatures_from_ids(doc_token_ids(d))
-
-
 def minhash_lsh_pairs(
     spark: SparkSession, t, threshold: float = 0.8
 ) -> DataFrame:

@@ -23,9 +23,21 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from unichem2index_spark.functions import bm25
+from unichem2index_spark.functions.phrase import (
+    PosTermPostings,
+    intervals_ordered_match_topk,
+    phrase_match_topk,
+    phrase_prefix_match_topk,
+    span_containing_match_topk,
+    span_first_match_topk,
+    span_near_match_topk,
+    span_near_or_match_topk,
+    span_not_match_topk,
+)
 from unichem2index_spark.functions.wand import (
     TermBlocks,
     maxscore_topk,
@@ -38,6 +50,17 @@ from unichem2index_spark.operators.build import (
 )
 from unichem2index_spark.schemas import TOPK_SCHEMA
 from unichem2index_spark.sources.tables import SegmentStore
+
+
+def _merge_topk(scores: DataFrame, k: int) -> DataFrame:
+    """Top-k of (doc_id, score) candidates by (score desc, doc_id asc),
+    score rounded to 6 dp for output only — the global merge of every
+    top-k query."""
+    return (
+        scores.orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+        .select("doc_id", F.round("score", 6).alias("score"))
+    )
 
 
 # --------------------------------------------------------------------------
@@ -132,11 +155,8 @@ def bm25_topk_exact(
 ) -> DataFrame:
     """Top-k by (score desc, doc_id asc); score rounded to 6 dp for stable
     cross-engine comparison."""
-    return (
-        bm25_scores_from_corpus(docs_df, terms, boosts=boosts)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+    return _merge_topk(
+        bm25_scores_from_corpus(docs_df, terms, boosts=boosts), k
     )
 
 
@@ -167,11 +187,7 @@ def bm25_topk_field_boost(
             * F.log(F.lit(1.0) + F.lit(float(factor)) * F.col(field))
         ).alias("score"),
     )
-    return (
-        boosted.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(boosted, k)
 
 
 def bm25_topk_dismax(
@@ -202,11 +218,7 @@ def bm25_topk_dismax(
             + F.lit(float(tie_breaker)) * (F.col("total") - F.col("best"))
         ).alias("score"),
     )
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(scored, k)
 
 
 def bm25_topk_boosting(
@@ -245,11 +257,7 @@ def bm25_topk_boosting(
             )
         ).alias("score"),
     )
-    return (
-        demoted.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(demoted, k)
 
 
 def bm25_topk_gauss_decay(
@@ -280,11 +288,7 @@ def bm25_topk_gauss_decay(
             * F.exp(-(dist * dist) / F.lit(float(denom)))
         ).alias("score"),
     )
-    return (
-        decayed.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(decayed, k)
 
 
 def collapse_topk(
@@ -440,11 +444,8 @@ def random_score_topk(
         ).cast("double")
         / F.lit(float(_RS_MOD))
     )
-    return (
-        scores.select("doc_id", (F.col("score") * r).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+    return _merge_topk(
+        scores.select("doc_id", (F.col("score") * r).alias("score")), k
     )
 
 
@@ -1485,11 +1486,7 @@ def terms_set_topk(
         ),
         "doc_id",
     ).where(F.col("n_matched") >= F.col("required"))
-    return (
-        gated.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(gated, k)
 
 
 def bm25_topk_synonyms(
@@ -1563,12 +1560,8 @@ def bm25_topk_synonyms(
             )
         ).alias("contrib"),
     )
-    return (
-        contrib.groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+    return _merge_topk(
+        contrib.groupBy("doc_id").agg(F.sum("contrib").alias("score")), k
     )
 
 
@@ -1603,11 +1596,8 @@ def bm25_topk_min_score(
     bad results" pages). The floor compares RAW scores — rounding only
     at emit, like every other ordering decision."""
     scores = bm25_scores_from_corpus(docs_df, terms)
-    return (
-        scores.where(F.col("score") >= F.lit(float(min_score)))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+    return _merge_topk(
+        scores.where(F.col("score") >= F.lit(float(min_score))), k
     )
 
 
@@ -1940,10 +1930,11 @@ class IndexHandle:
         dele = self.deletes(spark)
         if dele is None:
             return spark.createDataFrame([], "shard int, doc_id long")
-        return dele.select(
-            (F.col("doc_id") % self.n_shards).cast("int").alias("shard"),
-            "doc_id",
-        )
+        return dele.select(self._shard_col(), "doc_id")
+
+    def _shard_col(self):
+        """The index's doc-sharding function, as a ``shard`` column."""
+        return (F.col("doc_id") % self.n_shards).cast("int").alias("shard")
 
     def deleted_ids(self, spark: SparkSession) -> frozenset[int]:
         """Diagnostics/test helper ONLY (drivers a collect): the query and
@@ -1960,6 +1951,76 @@ class IndexHandle:
         # No broadcast hint: AQE broadcasts small tombstone sets, shuffle
         # anti-joins the 10^8-row update waves that would OOM a driver.
         return df.join(dele, "doc_id", "left_anti")
+
+    def per_shard(
+        self,
+        spark: SparkSession,
+        seg: DataFrame,
+        kernel,
+        schema: T.StructType,
+        side: DataFrame | None = None,
+    ) -> DataFrame:
+        """The per-shard execution path of every index-backed query:
+        ``seg`` (term-pruned segment rows) grouped by shard, ``kernel``
+        run once per shard, its rows (tuples in ``schema`` order) out.
+
+        ``kernel(pdf, deleted)`` gets the shard's segment rows and its
+        tombstone frozenset — cogrouped per shard (the doc-sharded
+        live-docs bitmap analog), so the delete set never reaches the
+        driver or a UDF closure. With ``side`` (a (shard, doc_id, ...)
+        frame that folds the tombstones in itself) the kernel gets the
+        shard's rows of that frame instead."""
+        cols = schema.fieldNames()
+
+        def run(pdf: pd.DataFrame, ids) -> pd.DataFrame:
+            # a cogrouped shard can have side rows but no query terms
+            rows = kernel(pdf, ids) if len(pdf) else ()
+            return pd.DataFrame(list(rows), columns=cols)
+
+        if side is not None:
+            fn = run
+        else:
+            dele = self.deletes(spark)
+            if dele is None:
+                # Never-updated index: skip the cogroup's extra (empty)
+                # grouped side — per-query latency, the serving hot path.
+                return seg.groupBy("shard").applyInPandas(
+                    lambda pdf: run(pdf, frozenset()), schema
+                )
+            side = dele.select(self._shard_col(), "doc_id")
+
+            def fn(pdf: pd.DataFrame, dele_pdf: pd.DataFrame) -> pd.DataFrame:
+                return run(pdf, frozenset(int(x) for x in dele_pdf["doc_id"]))
+
+        return (
+            seg.groupBy("shard")
+            .cogroup(side.groupBy("shard"))
+            .applyInPandas(fn, schema)
+        )
+
+
+def _segment_scan(
+    spark: SparkSession, index: IndexHandle, terms, cols: list[str]
+) -> DataFrame:
+    """The query terms' segment rows, pruned to the kernel's columns."""
+    return index.segments(spark).where(F.col("term").isin(list(terms))).select(
+        *cols
+    )
+
+
+def _collect_idfs(
+    spark: SparkSession, index: IndexHandle, terms: list[str]
+) -> dict[str, float]:
+    """idf per query term that has a term_stats row — the one idf lookup
+    of the query path (a term without a row is absent from the index).
+    Tiny driver-side collect of <= |query| rows (broadcast analog)."""
+    ts = (
+        index.term_stats(spark)
+        .where(F.col("term").isin(sorted(set(terms))))
+        .select("term", "idf")
+        .collect()
+    )
+    return {r.term: float(r.idf) for r in ts}
 
 
 # The WAND kernels read exactly these columns; pruning them out of the
@@ -2002,16 +2063,36 @@ def _cursors_from_group(
     )
 
 
-def _wand_shard_fn(
+def _term_cursors(
+    pdf: pd.DataFrame,
     idfs: dict[str, float],
     avgdl: float,
-    k: int,
-    use_stored_bounds: bool = True,
+    use_stored_bounds: bool,
+) -> dict[str, TermBlocks]:
+    """One cursor per term of a shard's segment rows, in term order.
+    Terms without an idf are skipped: a segment term with no term_stats
+    row is absent from the query, never a lookup error."""
+    return {
+        str(t): _cursors_from_group(
+            g, str(t), idfs[str(t)], avgdl, use_stored_bounds
+        )
+        for t, g in pdf.groupby("term", sort=True)
+        if str(t) in idfs
+    }
+
+
+def _per_shard_wand(
+    spark: SparkSession,
+    index: IndexHandle,
+    idfs: dict[str, float],
+    depth: int,
     min_match: int = 1,
     after: tuple[float, int] | None = None,
-):
-    """Per-shard WAND kernel (cogrouped with the shard's tombstones —
-    the delete set rides the shuffle, never the driver or UDF closures).
+    use_stored_bounds: bool | None = None,
+) -> DataFrame:
+    """Raw per-shard WAND candidates (doc_id, UNROUNDED score): the shared
+    tail of every WAND query — pushed ``term IN`` segment scan, tombstone
+    cogroup, per-shard kernel, n_shards·depth rows out.
 
     ``use_stored_bounds=False`` (multi-generation / post-update indexes):
     stored block_max_score was computed with build-time idf/avgdl, which
@@ -2019,30 +2100,19 @@ def _wand_shard_fn(
     monotone pair (block_max_tf, block_min_dl) under CURRENT stats instead.
     Exact rescoring always uses current stats either way.
     """
+    if use_stored_bounds is None:
+        use_stored_bounds = not index.multi_gen
+    avgdl = index.avgdl
 
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        cursors = [
-            _cursors_from_group(
-                grp, str(term), idfs[str(term)], avgdl, use_stored_bounds
-            )
-            for term, grp in pdf.groupby("term", sort=True)
-        ]
-        top = wand_topk(
-            cursors, avgdl, k, deleted=deleted, min_match=min_match,
-            after=after,
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
+    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
+        cursors = _term_cursors(pdf, idfs, avgdl, use_stored_bounds)
+        return wand_topk(
+            list(cursors.values()), avgdl, depth, deleted=deleted,
+            min_match=min_match, after=after,
         )
 
-    return fn
+    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    return index.per_shard(spark, seg, fn, TOPK_SCHEMA)
 
 
 def bm25_topk_wand(
@@ -2075,53 +2145,23 @@ def bm25_topk_wand(
     (block_max_tf, block_min_dl) pair under the boosted idf, exactly the
     multi-generation fallback path.
     """
-    uniq = sorted(set(terms))
-    if min_match > len(uniq):
+    if min_match > len(set(terms)):
         return spark.createDataFrame([], TOPK_SCHEMA)
-    # Tiny driver-side lookup: idf for <= |query| terms (broadcast analog).
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
     boosts = boosts or {}
     idfs = {
-        r.term: float(r.idf) * float(boosts.get(r.term, 1.0)) for r in ts
+        t: v * float(boosts.get(t, 1.0))
+        for t, v in _collect_idfs(spark, index, terms).items()
     }
     if not idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = index.segments(spark).where(F.col("term").isin(list(idfs))).select(
-        *_WAND_COLS
-    )
-    fn = _wand_shard_fn(
-        idfs,
-        index.avgdl,
-        k,
+    per_shard = _per_shard_wand(
+        spark, index, idfs, k, min_match=min_match,
         # stored bounds are tight AND valid only while stats match the
         # build (and the query is unboosted); any later generation or a
         # boosted term invalidates them.
         use_stored_bounds=not index.multi_gen and not boosts,
-        min_match=min_match,
     )
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        # Never-updated index: skip the cogroup's extra (empty) grouped
-        # side — per-query latency, the serving hot path.
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(per_shard, k)
 
 
 def bm25_topk_maxscore(
@@ -2144,56 +2184,51 @@ def bm25_topk_maxscore(
     Scale shape: identical to the WAND path — the kernel choice is
     per-shard-local and changes nothing about the scan, the shuffle, or
     the candidate merge."""
-    uniq = sorted(set(terms))
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, terms)
     if not idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = index.segments(spark).where(F.col("term").isin(list(idfs))).select(
-        *_WAND_COLS
-    )
     use_stored = not index.multi_gen
     avgdl = index.avgdl
 
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        cursors = [
-            _cursors_from_group(
-                grp, str(term), idfs[str(term)], avgdl, use_stored
-            )
-            for term, grp in pdf.groupby("term", sort=True)
-        ]
-        top = maxscore_topk(cursors, avgdl, k, deleted=deleted)
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
+    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
+        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        return maxscore_topk(list(cursors.values()), avgdl, k, deleted=deleted)
 
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
+    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
+
+
+_BATCH_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.IntegerType()),
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
+
+
+def _merge_batch(
+    spark: SparkSession, per_shard: DataFrame, queries: list[dict]
+) -> DataFrame:
+    """Per-query top-k merge of a batch's per-shard candidates: one
+    global window per query_id over <= n_shards * k rows, each query's
+    own k joined in as a broadcast (query_id, k) frame."""
+    ks = {int(q["query_id"]): int(q["k"]) for q in queries}
+    k_df = spark.createDataFrame(
+        [(q, k) for q, k in ks.items()], "query_id int, k int"
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        per_shard.withColumn("rank", F.row_number().over(w))
+        .join(F.broadcast(k_df), "query_id")
+        .where(F.col("rank") <= F.col("k"))
+        .select(
+            "query_id",
+            "rank",
+            "doc_id",
+            F.round("score", 6).alias("score"),
+        )
+        .orderBy("query_id", "rank")
     )
 
 
@@ -2213,20 +2248,12 @@ def bm25_topk_batch(
     WAND per query inside a single applyInPandas stage, then one global
     window per query_id over <= n_shards * k candidate rows.
     """
-    from pyspark.sql import Window as W
-
     all_terms = sorted({t for q in queries for t in q["terms"]})
     if not all_terms or not queries:
         return spark.createDataFrame(
             [], "query_id int, rank int, doc_id long, score double"
         )
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(all_terms))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, all_terms)
     qspec = [
         (int(q["query_id"]), sorted({t for t in q["terms"] if t in idfs}), int(q["k"]))
         for q in queries
@@ -2234,66 +2261,23 @@ def bm25_topk_batch(
     avgdl = index.avgdl
     use_stored = not index.multi_gen
 
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
+    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
         # Build each term's cursor ONCE per shard (the pandas sort +
         # list materialization in _cursors_from_group was ~40% of the
         # batch kernel when run per query), then hand every query a
         # cheap rewound clone: fresh() shares the immutable block lists
         # AND the decoded-block cache, so each block is varbyte-decoded
         # at most once per shard per batch instead of once per query.
-        tmpl: dict[str, TermBlocks] = {
-            str(t): _cursors_from_group(g, str(t), idfs[str(t)], avgdl, use_stored)
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        qids, dids, scores = [], [], []
+        tmpl = _term_cursors(pdf, idfs, avgdl, use_stored)
         for qid, terms, k in qspec:
             # Fresh cursor state per query: wand_topk advances it.
             cursors = [tmpl[t].fresh() for t in terms if t in tmpl]
             for d, s in wand_topk(cursors, avgdl, k, deleted=deleted):
-                qids.append(qid)
-                dids.append(d)
-                scores.append(s)
-        return pd.DataFrame({"query_id": qids, "doc_id": dids, "score": scores})
+                yield qid, d, s
 
-    seg = index.segments(spark).where(F.col("term").isin(all_terms)).select(
-        *_WAND_COLS
-    )
-    batch_schema = "query_id int, doc_id long, score double"
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, batch_schema)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), batch_schema
-        )
-    ks = {int(q["query_id"]): int(q["k"]) for q in queries}
-    k_df = spark.createDataFrame(
-        [(q, k) for q, k in ks.items()], "query_id int, k int"
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("rank", F.row_number().over(w))
-        .join(F.broadcast(k_df), "query_id")
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "query_id",
-            "rank",
-            "doc_id",
-            F.round("score", 6).alias("score"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    seg = _segment_scan(spark, index, sorted(idfs), _WAND_COLS)
+    per_shard = index.per_shard(spark, seg, fn, _BATCH_SCHEMA)
+    return _merge_batch(spark, per_shard, queries)
 
 
 def bm25_topk_filtered(
@@ -2334,19 +2318,10 @@ def bm25_topk_filtered(
     Both shapes are verified identical on broad predicates in
     tests/test_phrase.py::test_bm25_filtered_mode_equivalence.
     """
-    uniq = sorted(set(terms))
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, terms)
     if not idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = index.segments(spark).where(F.col("term").isin(list(idfs))).select(
-        *_WAND_COLS
-    )
+    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
     # Null predicate results never match (SQL filter semantics): the
     # bitset side drops them, so the complement side must include them.
     match_flag = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
@@ -2360,7 +2335,7 @@ def bm25_topk_filtered(
     avgdl = index.avgdl
     use_stored = not index.multi_gen
 
-    by_shard = (F.col("doc_id") % index.n_shards).cast("int").alias("shard")
+    by_shard = index._shard_col()
     if mode == "complement":
         # docs() already dropped tombstones; add them back so the kernel
         # skips them too (the unfiltered path's deletes cogroup).
@@ -2376,31 +2351,12 @@ def bm25_topk_filtered(
     else:
         raise ValueError(f"unknown mode {mode!r}")
 
-    def fn(pdf: pd.DataFrame, ids_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
+    def fn(pdf: pd.DataFrame, ids_pdf: pd.DataFrame):
         ids = frozenset(int(x) for x in ids_pdf["doc_id"])
-        cursors = [
-            _cursors_from_group(
-                grp, str(term), idfs[str(term)], avgdl, use_stored
-            )
-            for term, grp in pdf.groupby("term", sort=True)
-        ]
-        top = wand_topk(cursors, avgdl, k, **{id_kw: ids})
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
+        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        return wand_topk(list(cursors.values()), avgdl, k, **{id_kw: ids})
 
-    per_shard = (
-        seg.groupBy("shard")
-        .cogroup(side.groupBy("shard"))
-        .applyInPandas(fn, TOPK_SCHEMA)
-    )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA, side), k)
 
 
 def bm25_topk_field_boost_wand(
@@ -2478,54 +2434,27 @@ def _wand_mult_frame_topk(
     (doc_id, m) frame cogroups per shard like the filter bitset; docs
     absent from it (tombstones — docs() drops them) are ineligible, so
     the deletes cogroup is subsumed."""
-    uniq = sorted(set(terms))
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, terms)
     if not idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = index.segments(spark).where(F.col("term").isin(list(idfs))).select(
-        *_WAND_COLS
+    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    side = index.docs(spark).select(
+        index._shard_col(), "doc_id", m_col.alias("m")
     )
-    by_shard = (F.col("doc_id") % index.n_shards).cast("int").alias("shard")
-    side = index.docs(spark).select(by_shard, "doc_id", m_col.alias("m"))
     avgdl = index.avgdl
     use_stored = not index.multi_gen
 
-    def fn(pdf: pd.DataFrame, m_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
+    def fn(pdf: pd.DataFrame, m_pdf: pd.DataFrame):
         mult = {
             int(d): float(m)
             for d, m in zip(m_pdf["doc_id"], m_pdf["m"])
         }
-        cursors = [
-            _cursors_from_group(
-                grp, str(term), idfs[str(term)], avgdl, use_stored
-            )
-            for term, grp in pdf.groupby("term", sort=True)
-        ]
-        top = wand_topk(
-            cursors, avgdl, k, mult=mult, mult_bound=bound
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
+        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        return wand_topk(
+            list(cursors.values()), avgdl, k, mult=mult, mult_bound=bound
         )
 
-    per_shard = (
-        seg.groupBy("shard")
-        .cogroup(side.groupBy("shard"))
-        .applyInPandas(fn, TOPK_SCHEMA)
-    )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA, side), k)
 
 
 def bm25_topk_random_score_wand(
@@ -2545,72 +2474,33 @@ def bm25_topk_random_score_wand(
     stored bounds are already admissible (mult_bound=1). Tombstones
     still need the deletes path since a callable can't encode absence —
     the standard cogroup handles that."""
-    uniq = sorted(set(terms))
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, terms)
     if not idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = index.segments(spark).where(F.col("term").isin(list(idfs))).select(
-        *_WAND_COLS
-    )
     avgdl = index.avgdl
     use_stored = not index.multi_gen
     s_int = int(seed)
 
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        cursors = [
-            _cursors_from_group(
-                grp, str(term), idfs[str(term)], avgdl, use_stored
-            )
-            for term, grp in pdf.groupby("term", sort=True)
-        ]
-        top = wand_topk(
-            cursors,
+    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
+        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        return wand_topk(
+            list(cursors.values()),
             avgdl,
             k,
             deleted=deleted,
             mult=lambda d: ((d + s_int) * _RS_MULT) % _RS_MOD / float(_RS_MOD),
             mult_bound=1.0,
         )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
 
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
 
 
 # --------------------------------------------------------------------------
 # Bool must_not, term expansion (prefix / fuzzy), pagination
 # --------------------------------------------------------------------------
 def _doc_ids_from_group(grp: pd.DataFrame) -> set[int]:
-    """All doc_ids in one term's segment rows (decode-only, no scores)."""
+    """All doc_ids in these segment rows (decode-only, no scores)."""
     from unichem2index_spark.functions.codec import PostingBlock
 
     ids: set[int] = set()
@@ -2644,64 +2534,27 @@ def bm25_topk_must_not(
     modeled as a docs-table predicate via :func:`bm25_topk_filtered`'s
     complement mode, which bounds memory by the smaller side.
     """
-    excl = sorted(set(exclude_terms))
-    uniq = sorted(set(terms) - set(excl))
-    excl_set = frozenset(excl)
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
+    excl_set = frozenset(exclude_terms)
+    idfs = _collect_idfs(
+        spark, index, [t for t in terms if t not in excl_set]
     )
-    idfs = {r.term: float(r.idf) for r in ts}
     if not idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    scan_terms = sorted(set(idfs) | excl_set)
-    seg = index.segments(spark).where(
-        F.col("term").isin(scan_terms)
-    ).select(*_WAND_COLS)
     avgdl = index.avgdl
     use_stored = not index.multi_gen
 
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        excluded = (
-            set(int(x) for x in del_pdf["doc_id"]) if len(del_pdf) else set()
+    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
+        excluded = deleted | _doc_ids_from_group(
+            pdf[pdf["term"].isin(excl_set)]
         )
-        cursors = []
-        for term, grp in pdf.groupby("term", sort=True):
-            t = str(term)
-            if t in excl_set:
-                excluded |= _doc_ids_from_group(grp)
-            else:
-                cursors.append(
-                    _cursors_from_group(grp, t, idfs[t], avgdl, use_stored)
-                )
-        top = wand_topk(
-            cursors, avgdl, k, deleted=frozenset(excluded),
+        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        return wand_topk(
+            list(cursors.values()), avgdl, k, deleted=excluded,
             min_match=min_match,
         )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
 
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    seg = _segment_scan(spark, index, sorted(set(idfs) | excl_set), _WAND_COLS)
+    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
 
 
 def expand_prefix(
@@ -2820,78 +2673,18 @@ def bm25_topk_paged(
     The slice happens on RAW scores (same total order the unpaged query
     sorts by), so page boundaries agree with the oracle's OFFSET slice
     even when two adjacent docs round to the same 6-dp score."""
-    from pyspark.sql import Window as W
-
-    uniq = sorted(set(terms))
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
-    out_schema = "rank long, doc_id long, score double"
+    idfs = _collect_idfs(spark, index, terms)
     if not idfs:
-        return spark.createDataFrame([], out_schema)
-    seg = index.segments(spark).where(F.col("term").isin(list(idfs))).select(
-        *_WAND_COLS
-    )
-    fn = _wand_shard_fn(
-        idfs, index.avgdl, offset + k, use_stored_bounds=not index.multi_gen
-    )
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
+        return spark.createDataFrame([], "rank long, doc_id long, score double")
+    per_shard = _per_shard_wand(spark, index, idfs, offset + k)
     # Global window over <= n_shards*(offset+k) candidate rows — the
     # coordinator-merge analog (single tiny partition by construction).
-    w = W.orderBy(F.desc("score"), F.asc("doc_id"))
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         per_shard.withColumn("rank", F.row_number().over(w).cast("long"))
         .where((F.col("rank") > offset) & (F.col("rank") <= offset + k))
         .select("rank", "doc_id", F.round("score", 6).alias("score"))
         .orderBy("rank")
-    )
-
-
-def _per_shard_wand(
-    spark: SparkSession,
-    index: IndexHandle,
-    idfs: dict[str, float],
-    depth: int,
-    min_match: int = 1,
-    after: tuple[float, int] | None = None,
-    use_stored_bounds: bool | None = None,
-) -> DataFrame:
-    """Raw per-shard WAND candidates (doc_id, UNROUNDED score): the shared
-    tail of every expansion/pagination query — pushed ``term IN`` segment
-    scan, tombstone cogroup, per-shard kernel, n_shards·depth rows out."""
-    seg = index.segments(spark).where(F.col("term").isin(list(idfs))).select(
-        *_WAND_COLS
-    )
-    if use_stored_bounds is None:
-        use_stored_bounds = not index.multi_gen
-    fn = _wand_shard_fn(
-        idfs, index.avgdl, depth,
-        use_stored_bounds=use_stored_bounds,
-        min_match=min_match, after=after,
-    )
-    if index.store.exists("deletes"):
-        return (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    empty = pd.DataFrame({"doc_id": []})
-    return seg.groupBy("shard").applyInPandas(
-        lambda pdf: fn(pdf, empty), TOPK_SCHEMA
     )
 
 
@@ -2942,19 +2735,6 @@ def bm25_topk_multi_index(
     )
 
 
-def _collect_idfs(
-    spark: SparkSession, index: IndexHandle, terms: list[str]
-) -> dict[str, float]:
-    uniq = sorted(set(terms))
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    return {r.term: float(r.idf) for r in ts}
-
-
 def bm25_cursor_at(
     spark: SparkSession, index: IndexHandle, terms: list[str], rank: int
 ) -> tuple[float, int] | None:
@@ -3000,12 +2780,7 @@ def bm25_topk_search_after(
     idfs = _collect_idfs(spark, index, terms)
     if not idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    per_shard = _per_shard_wand(spark, index, idfs, k, after=after)
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(_per_shard_wand(spark, index, idfs, k, after=after), k)
 
 
 def expand_wildcard(
@@ -3089,13 +2864,11 @@ def more_like_this(
         return spark.createDataFrame([], TOPK_SCHEMA)
     qidfs = {t: idfs[t] for t in terms}
     per_shard = _per_shard_wand(spark, index, qidfs, k + 1)
-    return (
+    return _merge_topk(
         per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k + 1)
-        .where(F.col("doc_id") != doc_id)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        .where(F.col("doc_id") != doc_id),
+        k,
     )
 
 
@@ -3112,8 +2885,6 @@ _PHRASE_COLS = [
 
 
 def _pos_postings_from_group(grp: pd.DataFrame, term: str):
-    from unichem2index_spark.functions.phrase import PosTermPostings
-
     grp = grp.sort_values(["gen", "block_id"])
     return PosTermPostings(
         term=term,
@@ -3125,41 +2896,31 @@ def _pos_postings_from_group(grp: pd.DataFrame, term: str):
     )
 
 
-def _phrase_shard_fn(
-    phrase: list[str],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-    slop: int = 0,
-):
-    """Per-shard phrase matcher + BM25 scorer — block-skipping kernel
-    (:mod:`unichem2index_spark.functions.phrase`): candidates from the
-    rarest term, other terms probed via per-block max_doc_id, positions
-    decoded only for docs surviving the id intersection. Per-task memory
-    is O(df_shard(rarest term)), not O(sum df_shard(all terms))."""
-
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import phrase_match_topk
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
+def _require_positions(index: IndexHandle, op: str) -> None:
+    if not index.has_positions:
+        raise ValueError(
+            f"{op} requires a positional index "
+            "(build_index(..., positions=True))"
         )
+
+
+def _positional_topk(
+    spark: SparkSession, index: IndexHandle, scan_terms, k: int, match
+) -> DataFrame:
+    """Shared plan of the positional family: pushed ``term IN`` scan of
+    ``scan_terms``, per shard ``match(posts, deleted)`` over the shard's
+    per-term :class:`PosTermPostings` (block skipping, lazy position
+    decode), n_shards*k candidate rows to the global merge."""
+
+    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
         posts = {
             str(t): _pos_postings_from_group(g, str(t))
             for t, g in pdf.groupby("term", sort=True)
         }
-        top = phrase_match_topk(
-            posts, phrase, idfs, avgdl, k, slop=slop, deleted=deleted
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
+        return match(posts, deleted)
 
-    return fn
+    seg = _segment_scan(spark, index, scan_terms, _PHRASE_COLS)
+    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
 
 
 def phrase_topk(
@@ -3188,44 +2949,23 @@ def phrase_topk(
     top-k inside one applyInPandas stage, n_shards*k candidate rows to
     the global TakeOrderedAndProject. Tombstones cogroup per shard.
     Per-shard memory is bounded by the rarest term's postings (block
-    skipping), so a stopword in the phrase costs O(candidates), not its
-    full df."""
-    if not index.has_positions:
-        raise ValueError(
-            "phrase_topk requires a positional index "
-            "(build_index(..., positions=True))"
-        )
+    skipping: candidates from the rarest term, other terms probed via
+    per-block max_doc_id, positions decoded only for docs surviving the
+    id intersection), so a stopword in the phrase costs O(candidates),
+    not its full df."""
+    _require_positions(index, "phrase_topk")
     if not phrase:
         return spark.createDataFrame([], TOPK_SCHEMA)
     uniq = sorted(set(phrase))
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, uniq)
     if any(t not in idfs for t in uniq):
         return spark.createDataFrame([], TOPK_SCHEMA)  # phrase can't match
-    seg = index.segments(spark).where(F.col("term").isin(uniq)).select(
-        *_PHRASE_COLS
-    )
-    fn = _phrase_shard_fn(phrase, idfs, index.avgdl, k, slop=slop)
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+    avgdl = index.avgdl
+    return _positional_topk(
+        spark, index, uniq, k,
+        lambda posts, deleted: phrase_match_topk(
+            posts, phrase, idfs, avgdl, k, slop=slop, deleted=deleted
+        ),
     )
 
 
@@ -3247,64 +2987,19 @@ def span_near_topk(
     scan, per-shard rarest-first intersection with block skipping, lazy
     position decode for survivors only, n_shards·k rows to the global
     merge, tombstones cogrouped."""
-    if not index.has_positions:
-        raise ValueError(
-            "span_near_topk requires a positional index "
-            "(build_index(..., positions=True))"
-        )
+    _require_positions(index, "span_near_topk")
     uniq = sorted(set(terms))
     if not uniq:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, uniq)
     if any(t not in idfs for t in uniq):
         return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = index.segments(spark).where(F.col("term").isin(uniq)).select(
-        *_PHRASE_COLS
-    )
     avgdl = index.avgdl  # plain float in the closure, never the handle
-
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import span_near_match_topk
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        top = span_near_match_topk(
+    return _positional_topk(
+        spark, index, uniq, k,
+        lambda posts, deleted: span_near_match_topk(
             posts, uniq, idfs, avgdl, k, slop=slop, deleted=deleted
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
-
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        ),
     )
 
 
@@ -3324,61 +3019,16 @@ def span_first_topk(
     segment scan; per shard the term's postings decode block-by-block
     with lazy position decode, k survivors per shard reach the global
     merge; tombstones cogrouped exactly like the phrase family."""
-    if not index.has_positions:
-        raise ValueError(
-            "span_first_topk requires a positional index "
-            "(build_index(..., positions=True))"
-        )
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term") == term)
-        .select("idf")
-        .collect()
-    )
-    if not ts:
+    _require_positions(index, "span_first_topk")
+    idfs = _collect_idfs(spark, index, [term])
+    if term not in idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    idf = float(ts[0].idf)
-    seg = index.segments(spark).where(F.col("term") == term).select(
-        *_PHRASE_COLS
-    )
-    avgdl = index.avgdl
-
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import span_first_match_topk
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        top = span_first_match_topk(
+    idf, avgdl = idfs[term], index.avgdl
+    return _positional_topk(
+        spark, index, [term], k,
+        lambda posts, deleted: span_first_match_topk(
             posts, term, idf, avgdl, k, end, deleted=deleted
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
-
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        ),
     )
 
 
@@ -3400,62 +3050,17 @@ def span_not_topk(
     drive, the exclude term is probed candidate-by-candidate with block
     skipping and lazy position decode; tombstones cogrouped like the
     rest of the span family."""
-    if not index.has_positions:
-        raise ValueError(
-            "span_not_topk requires a positional index "
-            "(build_index(..., positions=True))"
-        )
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term") == include)
-        .select("idf")
-        .collect()
-    )
-    if not ts:
+    _require_positions(index, "span_not_topk")
+    idfs = _collect_idfs(spark, index, [include])
+    if include not in idfs:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    idf = float(ts[0].idf)
-    seg = index.segments(spark).where(
-        F.col("term").isin([include, exclude])
-    ).select(*_PHRASE_COLS)
-    avgdl = index.avgdl
-
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import span_not_match_topk
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        top = span_not_match_topk(
+    idf, avgdl = idfs[include], index.avgdl
+    return _positional_topk(
+        spark, index, [include, exclude], k,
+        lambda posts, deleted: span_not_match_topk(
             posts, include, exclude, idf, avgdl, k, dist=dist,
             deleted=deleted,
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
-
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        ),
     )
 
 
@@ -3477,26 +3082,16 @@ def phrase_topk_batch(
     against shared :class:`PosTermPostings` cursors whose decoded-block
     caches are reused across queries; then one global window per
     query_id over <= n_shards * k candidate rows."""
-    from pyspark.sql import Window as W
-
-    if not index.has_positions:
-        raise ValueError(
-            "phrase_topk_batch requires a positional index "
-            "(build_index(..., positions=True))"
-        )
+    _require_positions(index, "phrase_topk_batch")
     all_terms = sorted({t for q in queries for t in q["phrase"]})
-    out_schema = "query_id int, rank int, doc_id long, score double"
     if not all_terms or not queries:
-        return spark.createDataFrame([], out_schema)
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(all_terms))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
-    # An empty phrase matches nothing (phrase_topk parity) — drop it here
-    # rather than letting the kernel see a phrase with no rarest term.
+        return spark.createDataFrame(
+            [], "query_id int, rank int, doc_id long, score double"
+        )
+    idfs = _collect_idfs(spark, index, all_terms)
+    # An empty phrase matches nothing (phrase_topk parity), nor does one
+    # with a term absent from the index — drop both here rather than
+    # letting the kernel see them.
     qspec = [
         (
             int(q["query_id"]),
@@ -3505,68 +3100,24 @@ def phrase_topk_batch(
             int(q.get("slop", 0)),
         )
         for q in queries
-        if q["phrase"]
+        if q["phrase"] and all(t in idfs for t in q["phrase"])
     ]
     avgdl = index.avgdl
 
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import phrase_match_topk
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
+    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
         posts = {
             str(t): _pos_postings_from_group(g, str(t))
             for t, g in pdf.groupby("term", sort=True)
         }
-        qids, dids, scores = [], [], []
         for qid, phrase, k, slop in qspec:
-            if any(t not in idfs for t in phrase):
-                continue  # phrase can't match anywhere in the index
             for d, s in phrase_match_topk(
                 posts, phrase, idfs, avgdl, k, slop=slop, deleted=deleted
             ):
-                qids.append(qid)
-                dids.append(d)
-                scores.append(s)
-        return pd.DataFrame({"query_id": qids, "doc_id": dids, "score": scores})
+                yield qid, d, s
 
-    seg = index.segments(spark).where(F.col("term").isin(all_terms)).select(
-        *_PHRASE_COLS
-    )
-    batch_schema = "query_id int, doc_id long, score double"
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, batch_schema)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), batch_schema
-        )
-    ks = {int(q["query_id"]): int(q["k"]) for q in queries}
-    k_df = spark.createDataFrame(
-        [(q, k) for q, k in ks.items()], "query_id int, k int"
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("rank", F.row_number().over(w))
-        .join(F.broadcast(k_df), "query_id")
-        .where(F.col("rank") <= F.col("k"))
-        .select(
-            "query_id",
-            "rank",
-            "doc_id",
-            F.round("score", 6).alias("score"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    seg = _segment_scan(spark, index, sorted(idfs), _PHRASE_COLS)
+    per_shard = index.per_shard(spark, seg, fn, _BATCH_SCHEMA)
+    return _merge_batch(spark, per_shard, queries)
 
 
 # --------------------------------------------------------------------------
@@ -3962,22 +3513,12 @@ def span_near_or_topk(
     rarest-group-first intersection with block skipping, lazy position
     decode for survivors only, n_shards*k rows to the global merge,
     tombstones cogrouped."""
-    if not index.has_positions:
-        raise ValueError(
-            "span_near_or_topk requires a positional index "
-            "(build_index(..., positions=True))"
-        )
+    _require_positions(index, "span_near_or_topk")
     gs = [sorted({str(x) for x in g}) for g in groups if g]
     if not gs:
         return spark.createDataFrame([], TOPK_SCHEMA)
     members = sorted({t for g in gs for t in g})
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(members))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, members)
     # blended group idf = min PRESENT member idf (== idf at max df);
     # a group with no present member can never match.
     gidfs: list[float] = []
@@ -3986,49 +3527,12 @@ def span_near_or_topk(
         if not pres:
             return spark.createDataFrame([], TOPK_SCHEMA)
         gidfs.append(min(pres))
-    seg = index.segments(spark).where(
-        F.col("term").isin(members)
-    ).select(*_PHRASE_COLS)
     avgdl = index.avgdl
-
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import (
-            span_near_or_match_topk,
-        )
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        top = span_near_or_match_topk(
+    return _positional_topk(
+        spark, index, members, k,
+        lambda posts, deleted: span_near_or_match_topk(
             posts, gs, gidfs, avgdl, k, slop=slop, deleted=deleted
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
-
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        ),
     )
 
 
@@ -4105,67 +3609,20 @@ def intervals_ordered_topk(
     position decode + O(total positions) ordered-chain sweep for
     survivors only, n_shards*k rows to the global merge, tombstones
     cogrouped."""
-    if not index.has_positions:
-        raise ValueError(
-            "intervals_ordered_topk requires a positional index "
-            "(build_index(..., positions=True))"
-        )
+    _require_positions(index, "intervals_ordered_topk")
     q = [str(t) for t in terms if t]
     if not q:
         return spark.createDataFrame([], TOPK_SCHEMA)
     uniq = sorted(set(q))
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, uniq)
     if any(t not in idfs for t in uniq):
         return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = index.segments(spark).where(F.col("term").isin(uniq)).select(
-        *_PHRASE_COLS
-    )
     avgdl = index.avgdl  # plain float in the closure, never the handle
-
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import (
-            intervals_ordered_match_topk,
-        )
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        top = intervals_ordered_match_topk(
+    return _positional_topk(
+        spark, index, uniq, k,
+        lambda posts, deleted: intervals_ordered_match_topk(
             posts, q, idfs, avgdl, k, max_gaps=max_gaps, deleted=deleted
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
-
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        ),
     )
 
 
@@ -4199,11 +3656,7 @@ def match_phrase_prefix_topk(
     position decode for survivors only, n_shards*k rows to the global
     merge, tombstones cogrouped. The dictionary expansion is one pushed
     StartsWith scan returning <= max_expansions strings to the driver."""
-    if not index.has_positions:
-        raise ValueError(
-            "match_phrase_prefix_topk requires a positional index "
-            "(build_index(..., positions=True))"
-        )
+    _require_positions(index, "match_phrase_prefix_topk")
     fx = [str(t) for t in fixed if t]
     if not fx or not prefix:
         return spark.createDataFrame([], TOPK_SCHEMA)
@@ -4213,62 +3666,19 @@ def match_phrase_prefix_topk(
     if not group:
         return spark.createDataFrame([], TOPK_SCHEMA)
     uniq = sorted(fset)
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(uniq + group))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, uniq + group)
     if any(t not in idfs for t in uniq):
         return spark.createDataFrame([], TOPK_SCHEMA)
     # blended group idf = min member idf (== idf at max expansion df);
     # expand_prefix only returns dictionary terms, so all are present.
     group_idf = min(idfs[t] for t in group)
-    seg = index.segments(spark).where(
-        F.col("term").isin(uniq + group)
-    ).select(*_PHRASE_COLS)
     avgdl = index.avgdl
-
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import (
-            phrase_prefix_match_topk,
-        )
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        top = phrase_prefix_match_topk(
+    return _positional_topk(
+        spark, index, uniq + group, k,
+        lambda posts, deleted: phrase_prefix_match_topk(
             posts, fx, group, idfs, group_idf, avgdl, k,
             slop=slop, deleted=deleted,
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
-
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        ),
     )
 
 
@@ -4353,11 +3763,7 @@ def rank_feature_topk(
             + F.lit(float(boost)) * feat / (feat + F.lit(float(pivot)))
         ).alias("score"),
     )
-    return (
-        boosted.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(boosted, k)
 
 
 def terms_enum(
@@ -4451,11 +3857,7 @@ def combined_fields_topk(
         .groupBy("doc_id")
         .agg(F.sum("contrib").alias("score"))
     )
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(scored, k)
 
 
 def distance_feature_topk(
@@ -4486,11 +3888,7 @@ def distance_feature_topk(
             / (F.lit(float(pivot)) + dist)
         ).alias("score"),
     )
-    return (
-        boosted.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
-    )
+    return _merge_topk(boosted, k)
 
 
 def span_containing_topk(
@@ -4518,45 +3916,17 @@ def span_containing_topk(
     the global merge."""
     if mode not in ("containing", "within"):
         raise ValueError(f"span_containing_topk: bad mode {mode!r}")
-    if not index.has_positions:
-        raise ValueError(
-            "span_containing_topk requires a positional index "
-            "(build_index(..., positions=True))"
-        )
+    _require_positions(index, "span_containing_topk")
     uniq_big = sorted(set(big_terms))
     need = sorted(set(uniq_big + [little]))
     score_over = uniq_big if mode == "containing" else [little]
-    ts = (
-        index.term_stats(spark)
-        .where(F.col("term").isin(need))
-        .select("term", "idf")
-        .collect()
-    )
-    idfs = {r.term: float(r.idf) for r in ts}
+    idfs = _collect_idfs(spark, index, need)
     if any(t not in idfs for t in need):
         return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = index.segments(spark).where(F.col("term").isin(need)).select(
-        *_PHRASE_COLS
-    )
     avgdl = index.avgdl
-
-    def fn(pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        from unichem2index_spark.functions.phrase import (
-            span_containing_match_topk,
-        )
-
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        deleted = (
-            frozenset(int(x) for x in del_pdf["doc_id"])
-            if len(del_pdf)
-            else frozenset()
-        )
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        top = span_containing_match_topk(
+    return _positional_topk(
+        spark, index, need, k,
+        lambda posts, deleted: span_containing_match_topk(
             posts,
             uniq_big,
             little,
@@ -4566,26 +3936,7 @@ def span_containing_topk(
             slop=slop,
             score_terms=score_over,
             deleted=deleted,
-        )
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
-
-    if index.store.exists("deletes"):
-        per_shard = (
-            seg.groupBy("shard")
-            .cogroup(index.deletes_by_shard(spark).groupBy("shard"))
-            .applyInPandas(fn, TOPK_SCHEMA)
-        )
-    else:
-        empty = pd.DataFrame({"doc_id": []})
-        per_shard = seg.groupBy("shard").applyInPandas(
-            lambda pdf: fn(pdf, empty), TOPK_SCHEMA
-        )
-    return (
-        per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+        ),
     )
 
 

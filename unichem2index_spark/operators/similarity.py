@@ -113,19 +113,6 @@ def _table_bucket_expr(vcol: str, table: int, n_planes: int) -> F.Column:
     return out.cast("int")
 
 
-def _centroid_literal(centroids: list[tuple[int, list[float]]]) -> F.Column:
-    """array<struct<cell:int, c:array<double>>> literal for map-side argmin."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(cell).alias("cell"),
-                F.array(*[F.lit(float(x)) for x in vec]).alias("c"),
-            )
-            for cell, vec in centroids
-        ]
-    )
-
-
 def _nearest_cell_udf(centroids: list[tuple[int, list[float]]]):
     """Vectorized (Arrow/numpy) nearest-centroid assignment: one matmul
     per batch against the broadcast-sized centroid matrix — map-side, NO
@@ -136,7 +123,7 @@ def _nearest_cell_udf(centroids: list[tuple[int, list[float]]]):
     (measured ~40x slower at 32x64); the numpy path is the scale answer.
     Cosine argmax == argmax of dot/|c| (|v| is constant per row).
     Ties: lowest cell id (centroids are cell-sorted; argmax takes the
-    first maximum), matching the struct-ordering of the literal variant."""
+    first maximum)."""
     import numpy as np
 
     cells = np.array([c for c, _ in centroids], dtype="int32")
