@@ -1638,6 +1638,12 @@ def _wrap(fn):
 
 
 def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # Each "<name>_fast" entry is an alias of "<name>": one callable, one
+    # implementation, the same oracle SQL (kept so the entry list is stable).
+    dup_ngram_ratio = _wrap(trainprep.dup_ngram_ratio)
+    quality_filter = _wrap(trainprep.quality_filter)
+    exact_substring_dedup = _wrap(dedup.exact_substring_dedup)
+    shard_manifest = _wrap(trainprep.shard_manifest)
     return {
         # -- index / BM25 family (SURVEY §2.4-2.5, W4, A2-A6) --------------
         "bm25_topk": q_bm25_topk,
@@ -1832,15 +1838,12 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate": _wrap(trainprep.decontaminate),
         "pack_sequences": _wrap(trainprep.pack_sequences),
         "collapse_repeats": _wrap(trainprep.collapse_repeats),
-        "dup_ngram_ratio": _wrap(trainprep.dup_ngram_ratio),
-        # same oracle as dup_ngram_ratio: the Arrow fast path must be
-        # value-identical, not just approximately right
-        "dup_ngram_ratio_fast": _wrap(trainprep.dup_ngram_ratio_fast),
+        "dup_ngram_ratio": dup_ngram_ratio,
+        "dup_ngram_ratio_fast": dup_ngram_ratio,
         "pii_scrub": _wrap(trainprep.pii_scrub),
         "ingest_pipeline": _wrap(ingestpipe.ingest_pipeline_simulate),
-        "quality_filter": _wrap(trainprep.quality_filter),
-        # Arrow fast twin, same oracle (value identity required)
-        "quality_filter_fast": _wrap(trainprep.quality_filter_fast),
+        "quality_filter": quality_filter,
+        "quality_filter_fast": quality_filter,
         "sample_mixture": _wrap(trainprep.sample_mixture),
         "maxsim_topk": lambda s, d: similarity.maxsim_topk(
             s, load_tables(s, d)
@@ -1857,7 +1860,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_dedup_latest": q_stream_dedup_latest,
         # -- round-5 additions (trail the r5 gate window; r6 candidates) ----
         # Lee-et-al-style exact-substring duplication inventory
-        "exact_substring_dedup": _wrap(dedup.exact_substring_dedup),
+        "exact_substring_dedup": exact_substring_dedup,
         # ES cumulative_cardinality pipeline agg, exact via first-seen
         "cumulative_cardinality": _wrap(textstats.cumulative_cardinality),
         # cohort retention curve over the events stream
@@ -1872,8 +1875,7 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "training_order": _wrap(trainprep.training_order),
         # per-doc top-3 tf-idf keywords
         "tfidf_keywords": _wrap(textstats.tfidf_keywords),
-        # Arrow twin of exact_substring_dedup (same oracle)
-        "exact_substring_dedup_fast": _wrap(dedup.exact_substring_dedup_fast),
+        "exact_substring_dedup_fast": exact_substring_dedup,
         # ES percentiles_bucket pipeline agg (daily event counts)
         "percentiles_bucket": _wrap(textstats.percentiles_bucket),
         # ES ingest-node grok processor (named captures -> new fields)
@@ -2095,13 +2097,12 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # LTR feature/label export for the BM25 top-k
         "ltr_features": q_ltr_features,
         # WebDataset-style byte-budget output shard manifest
-        "shard_manifest": _wrap(trainprep.shard_manifest),
+        "shard_manifest": shard_manifest,
         # content-defined chunking (LBFS rolling-boundary dedup unit)
         "cdc_chunks": _wrap(dedup.cdc_chunks),
         # Manku'07 hamming-radius simhash pairs (band pigeonhole)
         "simhash_hamming": _wrap(dedup.simhash_hamming_pairs),
-        # two-level prefix-sum shard manifest (same oracle as above)
-        "shard_manifest_fast": _wrap(trainprep.shard_manifest_fast),
+        "shard_manifest_fast": shard_manifest,
         # PRF query expansion (Rocchio/RM-style feedback terms)
         "prf_expansion": q_prf_expansion,
         # >=2-of-3 near-dup method vote with provenance flags
@@ -2786,7 +2787,6 @@ def oracle_sql() -> dict[str, str]:
             hashing.MOD, hashing.FP_MULT
         ),
         "tfidf_keywords": oracles.tfidf_keywords_sql(),
-        # the fast twin answers to the SAME oracle as the slow path
         "exact_substring_dedup_fast": oracles.exact_substring_dedup_sql(
             dedup.SUBSTR_W
         ),

@@ -8,9 +8,9 @@ Why mapInPandas and not Catalyst array expressions: higher-order array
 functions are interpreted (not whole-stage-codegen'd), and the nested
 trigram transform measured 23x slower than the python-loop equivalent
 (50.4 s vs 2.2 s per 200k docs on local[8], identical results). The
-oracle-checked string-exact forms live in operators/trainprep.py;
-`dup_ngram_ratio_fast` there is this job's per-op twin, hash-checked
-against the same DuckDB oracle. Used by scripts/run_cleanup_scaling.py.
+oracle-checked per-op forms live in operators/trainprep.py
+(`dup_ngram_ratio`, `quality_filter`), hash-checked against their DuckDB
+oracles. Used by scripts/run_cleanup_scaling.py.
 """
 
 from __future__ import annotations

@@ -255,44 +255,3 @@ def test_neardup_clusters_union_find(spark):
         assert len(keepers) == 1
         best = min(members, key=lambda r: (-r.doclen, r.doc_id))
         assert keepers[0].doc_id == best.doc_id
-
-
-def test_exact_substring_fast_identity(spark):
-    """The Arrow twin is row-identical to the declarative HOF path."""
-    from unichem2index_spark.operators.dedup import (
-        exact_substring_dedup,
-        exact_substring_dedup_fast,
-    )
-    from unichem2index_spark.sources.tables import load_tables
-
-    from tests.conftest import SF_SMOKE
-
-    t = load_tables(spark, SF_SMOKE)
-    slow = {
-        r.doc_id: (r.n_windows, r.n_dup_windows, r.dup_frac)
-        for r in exact_substring_dedup(spark, t).collect()
-    }
-    fast = {
-        r.doc_id: (r.n_windows, r.n_dup_windows, r.dup_frac)
-        for r in exact_substring_dedup_fast(spark, t).collect()
-    }
-    assert fast == slow and fast
-
-
-def test_exact_substring_digest_identity(spark):
-    """digest=True (8-byte shuffle keys) produces identical counts."""
-    from unichem2index_spark.operators.dedup import exact_substring_dedup
-    from unichem2index_spark.sources.tables import load_tables
-
-    from tests.conftest import SF_SMOKE
-
-    t = load_tables(spark, SF_SMOKE)
-    a = {
-        r.doc_id: (r.n_windows, r.n_dup_windows, r.dup_frac)
-        for r in exact_substring_dedup(spark, t).collect()
-    }
-    b = {
-        r.doc_id: (r.n_windows, r.n_dup_windows, r.dup_frac)
-        for r in exact_substring_dedup(spark, t, digest=True).collect()
-    }
-    assert a == b and a

@@ -57,6 +57,31 @@ def test_gate_window_r5_composition():
     assert len(qs) == len(set(qs))
 
 
+# Entries that share one oracle SQL on purpose: different algorithms
+# that must give the same answer (exhaustive vs WAND vs MaxScore BM25,
+# corpus-path vs WAND-path random_score, batch vs streaming sessions).
+_SAME_ORACLE_DIFFERENT_ALGORITHM = [
+    {"bm25_topk", "bm25_topk_wand", "bm25_maxscore"},
+    {"random_score", "bm25_random_wand"},
+    {"sessionize", "stream_sessionize"},
+]
+
+
+def test_shared_oracle_entries_are_aliases_or_listed():
+    """Two entries answering to one oracle SQL either run the same
+    callable (an alias) or are a listed different-algorithm group — a
+    second implementation of the same output needs a reason to exist."""
+    qs = entrymod.queries()
+    by_sql: dict[str, set[str]] = {}
+    for name, sql in entrymod.oracle_sql().items():
+        by_sql.setdefault(sql, set()).add(name)
+    for names in by_sql.values():
+        if len(names) < 2:
+            continue
+        aliases = len({id(qs[n]) for n in names}) == 1
+        assert aliases or names in _SAME_ORACLE_DIFFERENT_ALGORITHM, names
+
+
 def test_oracle_sql_all_valid_duckdb(duck):
     for name, sql in entrymod.oracle_sql().items():
         duck.execute(f"SELECT * FROM ({sql}) LIMIT 0")  # parse + bind

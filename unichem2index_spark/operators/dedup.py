@@ -1,9 +1,10 @@
 """Deduplication operators for a large-scale training-data pipeline:
 exact, MinHash+LSH, SimHash, and token-shingle Jaccard.
 
-Everything stays JVM-side (explode / groupBy / join expressions — no Python
+Hashing stays JVM-side (explode / groupBy / join expressions — no Python
 workers): hashes are integer arithmetic over dense token ids so the exact
-same computation is expressible in the DuckDB oracle SQL.
+same computation is expressible in the DuckDB oracle SQL. The one Python
+pass is the exact-substring window inventory (see its docstring).
 
 Scale notes
 -----------
@@ -45,7 +46,7 @@ from unichem2index_spark.functions.hashing import (
     NUM_HASHES,
     SIMHASH_P,
 )
-from unichem2index_spark.functions.tokenize import tokens_col
+from unichem2index_spark.functions.tokenize import tokenize, tokens_col
 
 # Shingles whose document frequency exceeds this never generate candidate
 # pairs (boilerplate blocking); near-dups above jaccard ~0.5 share many
@@ -425,9 +426,7 @@ def ngram_jaccard_pairs(
 SUBSTR_W = 10
 
 
-def exact_substring_dedup(
-    spark: SparkSession, t, digest: bool = False
-) -> DataFrame:
+def exact_substring_dedup(spark: SparkSession, t) -> DataFrame:
     """Exact-substring duplication inventory at fixed granularity: for
     every document, how many of its W-token windows (stride 1) also
     appear verbatim in ANOTHER document — the per-doc summary a
@@ -436,51 +435,36 @@ def exact_substring_dedup(
     suffix-array pass of Lee et al. 2022 (which marks the same spans,
     just with variable length).
 
-    Scale shape: window inventory is a map-side explode (no pairs), the
-    cross-doc test is ONE hash agg on the window (map-side combined)
-    filtered to ndocs >= 2, and the flag-back is a join on that reduced
-    frame — candidates bounded by windows that actually repeat.
-    ``digest=True`` shuffles ``xxhash64(win)`` (8-byte key) instead of
-    the raw ~60-byte string — the digest-key trick of
-    :func:`dedup_exact` — cutting shuffle volume ~8x at production
-    window widths with IDENTICAL per-doc counts (measured 24.5 -> 18.3
-    s at 200k docs even with the shuffle memory-resident; identity
-    pytest at SF_SMOKE). The entry ships digest=False so the oracle
-    compares the exact string semantics; a 100-TB run flips the flag.
-    The Arrow window-inventory twin is
-    :func:`exact_substring_dedup_fast` (measured 1.17x at 200k docs —
-    unlike ``dup_ngram_ratio``'s 23x, this HOF is one
-    transform+array_join per window and the SHUFFLE dominates, which is
-    why the digest flag is the lever that matters here).
+    Scale shape: the window inventory is a map-side pass (no pairs),
+    the cross-doc test is ONE hash agg on the window string (map-side
+    combined) filtered to ndocs >= 2, and the flag-back is a join on
+    that reduced frame — candidates bounded by windows that actually
+    repeat. The inventory is built in an Arrow-batched ``mapInPandas``
+    because the Catalyst form, ``transform(sequence(...), slice ...)``,
+    runs interpreted (array HOFs are not whole-stage-codegen'd):
+    27.6 s vs 23.7 s at 200k docs (BENCH.md). The shuffle, not the
+    inventory, dominates what remains.
 
     A window duplicated only WITHIN one doc does not count (ndocs >= 2
     is distinct docs); every duplicated POSITION counts (multiplicity
     kept), matching span-removal accounting."""
-    d = t["documents"]
+    import pandas as pd
+
+    docs = t["documents"].select("doc_id", "text")
     W_ = SUBSTR_W
-    toks = d.select("doc_id", tokens_col("text").alias("toks"))
-    win_arr = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - W_),
-        lambda i: F.array_join(F.slice("toks", i + 1, W_), " "),
-    )
-    if digest:
-        win_arr = F.transform(win_arr, lambda x: F.xxhash64(x))
-    empty = f"array<{'bigint' if digest else 'string'}>"
-    wins = toks.select(
-        "doc_id",
-        F.explode(
-            F.when(F.size("toks") >= W_, win_arr).otherwise(
-                F.array().cast(empty)
-            )
-        ).alias("win"),
-    )
-    return _substring_doc_summary(wins)
 
+    def fn(batches):
+        for pdf in batches:
+            ids: list = []
+            ws: list = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                toks = tokenize(text)
+                for i in range(len(toks) - W_ + 1):
+                    ids.append(doc_id)
+                    ws.append(" ".join(toks[i : i + W_]))
+            yield pd.DataFrame({"doc_id": ids, "win": ws})
 
-def _substring_doc_summary(wins: DataFrame) -> DataFrame:
-    """Shared tail of the exact-substring inventory: cross-doc dup test
-    (ONE map-side-combined hash agg, ndocs >= 2), per-doc totals, and
-    the flag-back join on the reduced dup set."""
+    wins = docs.mapInPandas(fn, "doc_id long, win string")
     dup_wins = (
         wins.select("win", "doc_id")
         .distinct()
@@ -509,44 +493,6 @@ def _substring_doc_summary(wins: DataFrame) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-def exact_substring_dedup_fast(spark: SparkSession, t) -> DataFrame:
-    """The measured fast path for :func:`exact_substring_dedup` —
-    IDENTICAL values (same tokenizer, same window construction, same
-    rounding; checked against the SAME DuckDB oracle), but the window
-    inventory is built in an Arrow-batched ``mapInPandas`` instead of
-    the interpreted ``transform(sequence(...), slice ...)`` HOF chain
-    (Catalyst array HOFs are not whole-stage-codegen'd — the 23x
-    finding of ``dup_ngram_ratio_fast``, BENCH.md). The shuffle-side
-    plan (dup-window agg + flag-back join) is byte-identical to the
-    declarative path via the shared tail.
-
-    At 100 TB the Python side additionally emits ``xxhash64(win)``
-    digests instead of raw strings (8-byte shuffle keys, same counts);
-    the string form here keeps the oracle shared with the slow path."""
-    import re as _re
-
-    import pandas as pd
-
-    docs = t["documents"].select("doc_id", "text")
-    W_ = SUBSTR_W
-
-    def fn(batches):
-        pat = _re.compile(r"[a-z0-9]+")
-        for pdf in batches:
-            ids: list = []
-            ws: list = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = pat.findall(text.lower())
-                n = len(toks) - W_ + 1
-                for i in range(max(n, 0)):
-                    ids.append(doc_id)
-                    ws.append(" ".join(toks[i : i + W_]))
-            yield pd.DataFrame({"doc_id": ids, "win": ws})
-
-    wins = docs.mapInPandas(fn, "doc_id long, win string")
-    return _substring_doc_summary(wins)
 
 
 # ------------------------------------------- near-dup cluster resolution

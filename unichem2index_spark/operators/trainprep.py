@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unichem2index_spark.functions.hashing import FP_MULT, MOD
-from unichem2index_spark.functions.tokenize import tokens_col
+from unichem2index_spark.functions.tokenize import tokenize, tokens_col
 
 # Percent thresholds of the deterministic doc_id hash: <90 train,
 # <95 valid, else test. Shared with the generated oracle SQL.
@@ -232,42 +232,44 @@ def collapse_repeats(spark: SparkSession, t) -> DataFrame:
     )
 
 
+def _ngram_counts(toks: list[str]) -> tuple[int, int]:
+    """(total, distinct) word DUP_NGRAM_N-grams of one token list."""
+    grams = list(zip(*(toks[j:] for j in range(DUP_NGRAM_N))))
+    return len(grams), len(set(grams))
+
+
 def dup_ngram_ratio(spark: SparkSession, t) -> DataFrame:
     """Gopher-style repetition quality signal: the fraction of a
     document's word 3-grams that are duplicates (1 - distinct/total),
-    and the keep/drop verdict at DUP_NGRAM_MAX_RATIO. Map-only JVM
-    array expressions; at 100 TB this composes with the quality filter
-    as one fused scan (no shuffle, no UDF)."""
-    docs = t["documents"]
-    toks = tokens_col(F.col("text"))
-    n = DUP_NGRAM_N
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(
-                " ",
-                *[F.element_at(toks, i + j + 1) for j in range(n)],
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    d = docs.select("doc_id", grams.alias("grams"))
-    ratio = F.when(
-        F.size("grams") > 0,
-        1.0
-        - F.size(F.array_distinct("grams")).cast("double")
-        / F.size("grams").cast("double"),
-    ).otherwise(F.lit(0.0))
-    return (
-        d.select(
-            "doc_id",
-            F.size("grams").alias("n_ngrams"),
-            F.size(F.array_distinct("grams")).alias("n_distinct"),
-            F.round(ratio, 6).alias("dup_ratio"),
-            (ratio <= DUP_NGRAM_MAX_RATIO).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
+    and the keep/drop verdict at DUP_NGRAM_MAX_RATIO.
+
+    Map-only and shuffle-free, computed in an Arrow-batched mapInPandas
+    because Catalyst's array higher-order functions are not
+    whole-stage-codegen'd: the interpreted ``transform(sequence(...),
+    element_at x3)`` form of the same signal measured ~23x slower
+    (50.4 s vs 2.2 s for 200k docs on local[8], identical sums,
+    BENCH.md) — ~3,800 vs ~170 core-hours for a 100 TB cleanup pass."""
+    docs = t["documents"].select("doc_id", "text")
+
+    def fn(batches):
+        for pdf in batches:
+            out = {"doc_id": [], "n_ngrams": [], "n_distinct": [],
+                   "dup_ratio": [], "keep": []}
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                ng, nd = _ngram_counts(tokenize(text))
+                ratio = 1.0 - nd / ng if ng else 0.0
+                out["doc_id"].append(doc_id)
+                out["n_ngrams"].append(ng)
+                out["n_distinct"].append(nd)
+                out["dup_ratio"].append(round(ratio, 6))
+                out["keep"].append(ratio <= DUP_NGRAM_MAX_RATIO)
+            yield pd.DataFrame(out)
+
+    return docs.mapInPandas(
+        fn,
+        "doc_id long, n_ngrams int, n_distinct int, "
+        "dup_ratio double, keep boolean",
+    ).orderBy("doc_id")
 
 
 def pii_scrub(spark: SparkSession, t) -> DataFrame:
@@ -460,70 +462,59 @@ QF_STOPWORDS = ["the", "a", "of", "and", "is", "to", "in"]
 
 def quality_filter(spark: SparkSession, t) -> DataFrame:
     """Composite Gopher-style document filter: every rule evaluated in
-    ONE fused map-only pass (no shuffle, no UDF), emitting the keep/drop
-    verdict plus the array of failed-rule names — the audit trail a
-    production filter keeps so dropped-data rates are attributable per
-    rule. Rules: token-count band, mean-token-length band, duplicate
-    3-gram ratio (the :func:`dup_ngram_ratio` signal), and a minimum
-    stopword hit count."""
-    docs = t["documents"]
-    toks = tokens_col(F.col("text"))
-    n = F.size(toks)
-    tok_chars = F.aggregate(
-        F.transform(toks, lambda x: F.length(x).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    mean_len = tok_chars / F.greatest(n.cast("double"), F.lit(1.0))
-    grams = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(0), n - 3),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-                F.element_at(toks, i + 3),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    dup = F.when(
-        F.size(grams) > 0,
-        1.0
-        - F.size(F.array_distinct(grams)).cast("double")
-        / F.size(grams).cast("double"),
-    ).otherwise(F.lit(0.0))
-    stops = F.size(F.filter(toks, lambda x: x.isin(QF_STOPWORDS)))
+    ONE map-only pass (no shuffle), emitting the keep/drop verdict plus
+    the failed-rule names — the audit trail a production filter keeps
+    so dropped-data rates are attributable per rule. Rules: token-count
+    band, mean-token-length band, duplicate 3-gram ratio (the
+    :func:`dup_ngram_ratio` signal), and a minimum stopword hit count.
 
-    fails = F.array_compact(
-        F.array(
-            F.when(
-                (n < QF_MIN_TOKENS) | (n > QF_MAX_TOKENS), F.lit("length")
-            ),
-            F.when(
-                (mean_len < QF_MIN_MEAN_TOK_LEN)
-                | (mean_len > QF_MAX_MEAN_TOK_LEN),
-                F.lit("mean_tok_len"),
-            ),
-            F.when(dup > QF_MAX_DUP_RATIO, F.lit("dup_ngrams")),
-            F.when(stops < QF_MIN_STOP_HITS, F.lit("stopwords")),
-        )
-    )
-    return (
-        docs.select(
-            "doc_id",
-            n.alias("n_tokens"),
-            F.round(mean_len, 6).alias("mean_tok_len"),
-            F.round(dup, 6).alias("dup_ratio"),
-            stops.alias("stop_hits"),
-            # Serialized audit trail (comma-joined, rule order fixed):
-            # the repo-wide convention for list outputs, so the result
-            # canonicalizes cleanly in pandas-based comparators.
-            F.concat_ws(",", fails).alias("failed_rules"),
-            (F.size(fails) == 0).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
+    One Arrow-batched mapInPandas computes every signal, for the reason
+    :func:`dup_ngram_ratio` gives: the trigram array HOFs of a Catalyst
+    formulation run interpreted, ~22x slower per row (BENCH.md)."""
+    docs = t["documents"].select("doc_id", "text")
+    stopset = frozenset(QF_STOPWORDS)
+
+    def fn(batches):
+        for pdf in batches:
+            out = {"doc_id": [], "n_tokens": [], "mean_tok_len": [],
+                   "dup_ratio": [], "stop_hits": [], "failed_rules": [],
+                   "keep": []}
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                toks = tokenize(text)
+                n = len(toks)
+                mean_len = sum(len(x) for x in toks) / max(n, 1)
+                ng, nd = _ngram_counts(toks)
+                dup = 1.0 - nd / ng if ng else 0.0
+                stops = sum(1 for x in toks if x in stopset)
+                fails = []
+                if n < QF_MIN_TOKENS or n > QF_MAX_TOKENS:
+                    fails.append("length")
+                if (
+                    mean_len < QF_MIN_MEAN_TOK_LEN
+                    or mean_len > QF_MAX_MEAN_TOK_LEN
+                ):
+                    fails.append("mean_tok_len")
+                if dup > QF_MAX_DUP_RATIO:
+                    fails.append("dup_ngrams")
+                if stops < QF_MIN_STOP_HITS:
+                    fails.append("stopwords")
+                out["doc_id"].append(doc_id)
+                out["n_tokens"].append(n)
+                out["mean_tok_len"].append(round(mean_len, 6))
+                out["dup_ratio"].append(round(dup, 6))
+                out["stop_hits"].append(stops)
+                # Serialized audit trail (comma-joined, rule order
+                # fixed): the repo-wide convention for list outputs, so
+                # the result canonicalizes cleanly in pandas comparators.
+                out["failed_rules"].append(",".join(fails))
+                out["keep"].append(not fails)
+            yield pd.DataFrame(out)
+
+    return docs.mapInPandas(
+        fn,
+        "doc_id long, n_tokens int, mean_tok_len double, dup_ratio double, "
+        "stop_hits int, failed_rules string, keep boolean",
+    ).orderBy("doc_id")
 
 
 MIX_QUOTAS = {"src0": 20, "src1": 10}
@@ -558,102 +549,6 @@ def sample_mixture(
         .select("doc_id", "source", F.col("rk").alias("sample_rank"))
         .orderBy("source", "sample_rank")
     )
-
-
-def dup_ngram_ratio_fast(spark: SparkSession, t) -> DataFrame:
-    """The measured fast path for :func:`dup_ngram_ratio` — IDENTICAL
-    values (same tokenizer regex, same trigram set semantics, same
-    rounding; checked against the same DuckDB oracle), but computed in
-    an Arrow-batched mapInPandas instead of nested Catalyst array HOFs.
-
-    Why it exists: higher-order array functions are NOT whole-stage-
-    codegen'd — the interpreted `transform(sequence(...),
-    element_at x3)` costs ~23x more than the python-loop equivalent
-    (measured: 50.4 s vs 2.2 s for 200k docs on local[8], identical
-    sums). At 100 TB that is the difference between ~3,800 and ~170
-    core-hours for the cleanup pass. Still map-only, shuffle-free."""
-    import re as _re
-
-    docs = t["documents"].select("doc_id", "text")
-
-    def fn(batches):
-        pat = _re.compile(r"[a-z0-9]+")
-        for pdf in batches:
-            out = {"doc_id": [], "n_ngrams": [], "n_distinct": [],
-                   "dup_ratio": [], "keep": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = pat.findall(text.lower())
-                ng = max(len(toks) - 2, 0)
-                nd = len(set(zip(toks, toks[1:], toks[2:]))) if ng else 0
-                ratio = 1.0 - nd / ng if ng else 0.0
-                out["doc_id"].append(doc_id)
-                out["n_ngrams"].append(ng)
-                out["n_distinct"].append(nd)
-                out["dup_ratio"].append(round(ratio, 6))
-                out["keep"].append(ratio <= DUP_NGRAM_MAX_RATIO)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        fn,
-        "doc_id long, n_ngrams int, n_distinct int, "
-        "dup_ratio double, keep boolean",
-    ).orderBy("doc_id")
-
-
-def quality_filter_fast(spark: SparkSession, t) -> DataFrame:
-    """Arrow fast twin of :func:`quality_filter` (same rules, same
-    tokenizer, same rounding — hash-checked against the SAME DuckDB
-    oracle). Exists for the measured reason documented in BENCH.md:
-    the trigram/array HOFs in the declarative form are interpreted,
-    ~23x slower per row than this python loop; one mapInPandas computes
-    every signal in a single pass."""
-    import re as _re
-
-    docs = t["documents"].select("doc_id", "text")
-    stopset = frozenset(QF_STOPWORDS)
-
-    def fn(batches):
-        pat = _re.compile(r"[a-z0-9]+")
-        for pdf in batches:
-            out = {"doc_id": [], "n_tokens": [], "mean_tok_len": [],
-                   "dup_ratio": [], "stop_hits": [], "failed_rules": [],
-                   "keep": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = pat.findall(text.lower())
-                n = len(toks)
-                mean_len = (
-                    sum(len(x) for x in toks) / max(n, 1) if True else 0.0
-                )
-                ng = max(n - 2, 0)
-                nd = len(set(zip(toks, toks[1:], toks[2:]))) if ng else 0
-                dup = 1.0 - nd / ng if ng else 0.0
-                stops = sum(1 for x in toks if x in stopset)
-                fails = []
-                if n < QF_MIN_TOKENS or n > QF_MAX_TOKENS:
-                    fails.append("length")
-                if (
-                    mean_len < QF_MIN_MEAN_TOK_LEN
-                    or mean_len > QF_MAX_MEAN_TOK_LEN
-                ):
-                    fails.append("mean_tok_len")
-                if dup > QF_MAX_DUP_RATIO:
-                    fails.append("dup_ngrams")
-                if stops < QF_MIN_STOP_HITS:
-                    fails.append("stopwords")
-                out["doc_id"].append(doc_id)
-                out["n_tokens"].append(n)
-                out["mean_tok_len"].append(round(mean_len, 6))
-                out["dup_ratio"].append(round(dup, 6))
-                out["stop_hits"].append(stops)
-                out["failed_rules"].append(",".join(fails))
-                out["keep"].append(not fails)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(
-        fn,
-        "doc_id long, n_tokens int, mean_tok_len double, dup_ratio double, "
-        "stop_hits int, failed_rules string, keep boolean",
-    ).orderBy("doc_id")
 
 
 def training_order(spark: SparkSession, t) -> DataFrame:
@@ -1648,6 +1543,7 @@ def normalize_text(spark: SparkSession, t) -> DataFrame:
 
 
 SHARD_BYTES = 4096
+SHARD_BLOCK = 256  # docs per level-1 prefix-sum block
 
 
 def shard_manifest(spark: SparkSession, t) -> DataFrame:
@@ -1658,56 +1554,15 @@ def shard_manifest(spark: SparkSession, t) -> DataFrame:
     data - the step that turns a cleaned corpus into the fixed-size
     shard files a training loader streams.
 
-    Offsets are per-source prefix sums - order-dependent like
-    :func:`pack_sequences`, but LINEAR (no fill-state nonlinearity), so
-    the 100-TB upgrade is the textbook two-level prefix sum
-    (partition-local cumsum + broadcast per-partition offsets) that
-    parallelizes WITHIN a giant source; at gate scale the per-source
-    window is the same bounded plan pack_sequences ships, parallel
-    across sources."""
-    from pyspark.sql.window import Window
-
-    d = t["documents"]
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    start = (F.sum("n_chars").over(w) - F.col("n_chars")).alias("start_off")
-    sh = d.select(
-        "source",
-        "doc_id",
-        "n_chars",
-        F.floor(start / SHARD_BYTES).cast("long").alias("shard_id"),
-    )
-    return (
-        sh.groupBy("source", "shard_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("shard_bytes"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
-        )
-        .orderBy("source", "shard_id")
-    )
-
-
-SHARD_BLOCK = 256  # docs per prefix-sum block in the two-level variant
-
-
-def shard_manifest_fast(spark: SparkSession, t) -> DataFrame:
-    """Two-level prefix-sum twin of :func:`shard_manifest` — the scale
-    path that parallelizes the running-offset computation WITHIN a
-    giant source instead of one sequential window per source. Level 1:
-    docs bucket into SHARD_BLOCK-sized id blocks and cumsum INSIDE each
-    (source, block) — bounded windows, parallel across all blocks.
-    Level 2: per-block totals (a frame |docs|/SHARD_BLOCK rows tall)
-    cumsum per source to give each block its starting offset — the only
-    sequential step, now 256x smaller (recursing once more bounds it by
-    65536x; one level suffices here). start_offset = block offset +
-    local cumsum - own bytes, byte-identical to the single-window
-    formulation: registered against the SAME DuckDB oracle and pytest
-    row-identity-checked against shard_manifest."""
+    Offsets are per-source prefix sums, computed in two levels so no
+    task's work grows with the largest source (a single per-source
+    window runs one task per source). Level 1: docs bucket into
+    SHARD_BLOCK-sized id blocks and cumsum INSIDE each (source, block),
+    bounded windows parallel across all blocks. Level 2: per-block
+    totals, a frame |docs|/SHARD_BLOCK rows tall, cumsum per source to
+    give each block its starting offset; recursing once more would
+    bound it by SHARD_BLOCK^2. start_offset = block offset + local
+    cumsum - own bytes."""
     from pyspark.sql.window import Window
 
     d = t["documents"].select(
