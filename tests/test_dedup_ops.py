@@ -6,10 +6,12 @@ from __future__ import annotations
 
 import itertools
 
+import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from unichem2index_spark.functions.tokenize import tokenize
-from unichem2index_spark.operators.dedup import ngram_jaccard_pairs
+from unichem2index_spark.operators.dedup import ngram_jaccard_pairs, vocab_ids
 from unichem2index_spark.sources.tables import read_pipe_csv, write_pipe_csv
 
 from tests.conftest import SF_CORRECT
@@ -255,3 +257,28 @@ def test_neardup_clusters_union_find(spark):
         assert len(keepers) == 1
         best = min(members, key=lambda r: (-r.doclen, r.doc_id))
         assert keepers[0].doc_id == best.doc_id
+
+
+def test_vocab_ids_fails_when_the_source_gains_a_bucket(spark, tmp_path):
+    """vocab_ids collects its 3-char bucket offsets on the driver, and
+    the plan it returns evaluates the source again. A source that gained
+    a term in a new bucket in between must fail the query, not drop the
+    term. The source here re-reads a file on every evaluation (an
+    appended parquet file would not do: a DataFrame keeps the file
+    listing it was read with)."""
+    words = tmp_path / "words.txt"
+    words.write_text("alpha beta")
+    path = str(words)
+
+    @F.udf("array<string>")
+    def live_tokens(_):
+        with open(path) as f:
+            return f.read().split()
+
+    tok = spark.range(1).select(
+        F.col("id").alias("doc_id"), live_tokens("id").alias("tokens")
+    )
+    ids = vocab_ids(tok)
+    words.write_text("alpha beta zulu")
+    with pytest.raises(PySparkException, match="no offset for bucket zul"):
+        ids.collect()

@@ -82,6 +82,64 @@ def test_shared_oracle_entries_are_aliases_or_listed():
         assert aliases or names in _SAME_ORACLE_DIFFERENT_ALGORITHM, names
 
 
+# The BM25 idf expression has one home per place its inputs come from:
+# the query path's contributions (n_docs and avgdl over every doc), the
+# textstats weight (over docs with a token), and build.idf_col (n_docs
+# known on the driver). A scorer that spells it again is a real variant of
+# BM25 and is listed here with what makes it one.
+_BM25_IDF_HOMES = {
+    ("query.py", "_bm25_contribs"),
+    ("textstats.py", "_bm25_weight"),
+    ("build.py", "idf_col"),
+}
+_BM25_IDF_VARIANTS = {
+    ("query.py", "explain_score"): "emits idf and the weight as columns",
+    ("query.py", "trec_pool"): "scores two b values in one groupBy",
+    ("query.py", "bm25_topk_synonyms"): "df of blended synonym pseudo-terms",
+    ("query.py", "combined_fields_topk"): "BM25F length over summed fields",
+    ("textstats.py", "bm25f_topk"): "BM25F field-weighted tf and length",
+    ("textstats.py", "bm25_plus_topk"): "BM25+ adds delta to the tf-norm",
+    ("textstats.py", "static_prune_audit"): "every term, df from the tf frame",
+    ("textstats.py", "norms_quant_audit"): "tf-norm of the quantized doclen",
+    ("textstats.py", "shard_idf_drift"): "shard-local next to global stats",
+}
+
+
+def _bm25_idf_sites() -> set[tuple[str, str]]:
+    """(module file, top-level function) of every ``F.log(1.0 + ...)``
+    call with the BM25 ``+ 0.5`` smoothing of both df terms, in
+    operators/."""
+    import ast
+    from pathlib import Path
+
+    ops = Path(entrymod.__file__).parent / "unichem2index_spark" / "operators"
+    sites = set()
+    for path in sorted(ops.glob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            for node in ast.walk(fn):
+                if not (
+                    isinstance(node, ast.Call)
+                    and ast.unparse(node.func) == "F.log"
+                ):
+                    continue
+                src = ast.unparse(node)
+                if "1.0" in src and src.count("0.5") >= 2:
+                    sites.add((path.name, fn.name))
+    return sites
+
+
+def test_bm25_idf_is_spelled_only_in_its_homes_and_variants():
+    """A corpus scorer takes its BM25 weight from its convention's helper;
+    a new inline copy of the idf either moves onto the helper or is
+    listed as a variant with its reason."""
+    allowed = _BM25_IDF_HOMES | set(_BM25_IDF_VARIANTS)
+    sites = _bm25_idf_sites()
+    assert sites - allowed == set(), "inline BM25 idf copies"
+    assert allowed - sites == set(), "listed sites without a BM25 idf"
+
+
 def test_oracle_sql_all_valid_duckdb(duck):
     for name, sql in entrymod.oracle_sql().items():
         duck.execute(f"SELECT * FROM ({sql}) LIMIT 0")  # parse + bind

@@ -7,6 +7,8 @@ that has segment rows but no term_stats row.
   exchange or a helper job shows up here.
 * A segment term without a stats row is "absent" on every path: the batch
   kernel answers like the single-query WAND kernel instead of raising.
+* Building a corpus-path ranker's DataFrame runs no Spark job: corpus and
+  field statistics are aggregates inside the query's own plan.
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ from unichem2index_spark.operators.ingest import build_index_from_webtext
 from unichem2index_spark.operators.update import delete_by_query
 from unichem2index_spark.schemas import WEBTEXT_SCHEMA
 from unichem2index_spark.synth import gen_webtext
+
+from tests.conftest import SF_SMOKE
 
 _group_ids = itertools.count()
 
@@ -110,3 +114,32 @@ def test_missing_stats_row_means_term_absent(spark, tmp_path_factory):
         ).collect()
     ]
     assert got == exp
+
+
+RANK_QUERIES = [(0, ["merge", "group"], "key"), (1, ["the", "vector"], "merge")]
+CORPUS_RANKERS = {
+    "multi_match_topk": lambda spark, docs: Q.multi_match_topk(
+        spark, docs, ["the", "merge", "vector"], 10
+    ),
+    "avg_precision_eval": lambda spark, docs: Q.avg_precision_eval(
+        docs, RANK_QUERIES
+    ),
+    "rbp_eval": lambda spark, docs: Q.rbp_eval(docs, RANK_QUERIES),
+    "hard_negatives": lambda spark, docs: Q.hard_negatives(
+        docs, RANK_QUERIES
+    ),
+    "qpp_postretrieval": lambda spark, docs: Q.qpp_postretrieval(
+        docs, RANK_QUERIES
+    ),
+    "pivoted_length_audit": lambda spark, docs: Q.pivoted_length_audit(
+        docs, RANK_QUERIES
+    ),
+    "err_eval": lambda spark, docs: Q.err_eval(docs, RANK_QUERIES),
+}
+
+
+@pytest.mark.parametrize("name", list(CORPUS_RANKERS))
+def test_corpus_ranker_builds_without_jobs(spark, name):
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    build = CORPUS_RANKERS[name]
+    assert count_jobs(spark, lambda: build(spark, docs)) == 0

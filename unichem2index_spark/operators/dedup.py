@@ -100,11 +100,24 @@ def vocab_ids(tok: DataFrame) -> DataFrame:
         off += r.n3
     offsets = spark.createDataFrame(offs, "b3 string, _off long")
     w_rank = W.partitionBy("b3").orderBy("term")
+    # The offsets snapshot a plan the result evaluates again. A bucket the
+    # snapshot lacks (the source changed in between) fails the query
+    # rather than losing its terms to an inner join.
+    bucket_off = F.when(
+        F.col("_off").isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit("vocab_ids: no offset for bucket "),
+                F.col("b3"),
+                F.lit("; the source changed after the offsets were taken"),
+            )
+        ),
+    ).otherwise(F.col("_off"))
     return (
-        bucketed.join(F.broadcast(offsets), "b3")
+        bucketed.join(F.broadcast(offsets), "b3", "left")
         .select(
             "term",
-            (F.col("_off") + F.row_number().over(w_rank) - 1)
+            (bucket_off + F.row_number().over(w_rank) - 1)
             .cast("long")
             .alias("token_id"),
         )

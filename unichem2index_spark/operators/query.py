@@ -46,6 +46,7 @@ from unichem2index_spark.functions.wand import (
 from unichem2index_spark.operators.build import (
     corpus_stats,
     exact_postings,
+    idf_col,
     tokenized_docs,
 )
 from unichem2index_spark.schemas import TOPK_SCHEMA
@@ -79,8 +80,18 @@ def bm25_contribs_from_corpus(
     The boosted contribution is ``(idf * boost) * w`` — the same float
     association the WAND kernel uses when its per-term idf is pre-scaled,
     so boosted results stay score-identical across all three engines."""
+    return _bm25_contribs(tokenized_docs(docs_df), terms, boosts)
+
+
+def _bm25_contribs(
+    tok: DataFrame, terms: list[str], boosts: dict[str, float] | None = None
+) -> DataFrame:
+    """:func:`bm25_contribs_from_corpus` over a tokenized frame
+    (doc_id, tokens, doclen). The query-path convention: n_docs and avgdl
+    count EVERY row of ``tok``, docs with no tokens included — unlike
+    textstats' BM25 frame, which counts only docs with a token. A caller
+    that wants the other convention filters ``tok`` first."""
     uniq = sorted(set(terms))
-    tok = tokenized_docs(docs_df)
     # Corpus stats ride the SAME job as a broadcast 1-row aggregate
     # instead of a separate collect() job (which serialized a full
     # tokenize pass before the query could even plan). Float-identical
@@ -591,6 +602,70 @@ def rank_eval(
 AP_LCM = 232792560  # lcm(1..20): exact-integer precision@rank weights
 
 
+def _query_terms_frame(
+    spark: SparkSession, queries: list[tuple[int, list[str], str]]
+) -> DataFrame:
+    """(query_id, term): each query's distinct terms, for a broadcast
+    fan-out join."""
+    return spark.createDataFrame(
+        [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts))],
+        "query_id long, term string",
+    )
+
+
+def _markers_frame(
+    spark: SparkSession, queries: list[tuple[int, list[str], str]]
+) -> DataFrame:
+    """(query_id, marker): the term whose presence judges a doc relevant
+    to that query (the marker convention of :func:`rank_eval`)."""
+    return spark.createDataFrame(
+        [(qid, m) for qid, _, m in queries], "query_id long, marker string"
+    )
+
+
+def _multi_query_scores(
+    docs_df: DataFrame, queries: list[tuple[int, list[str], str]]
+) -> DataFrame:
+    """(query_id, doc_id, score): every query's BM25 score for every doc it
+    matches. Contributions are computed ONCE over the union of all query
+    terms (a term's contribution is query-independent), then fanned out to
+    queries by a broadcast (query_id, term) join — Q queries cost one
+    postings pass, not Q."""
+    all_terms = sorted({t for _, ts, _ in queries for t in ts})
+    qdf = _query_terms_frame(docs_df.sparkSession, queries)
+    return (
+        bm25_contribs_from_corpus(docs_df, all_terms)
+        .join(F.broadcast(qdf), "term")
+        .groupBy("query_id", "doc_id")
+        .agg(F.sum("contrib").alias("score"))
+    )
+
+
+def _rank_within(
+    scored: DataFrame, depth: int, col: str = "rank"
+) -> DataFrame:
+    """Rows of ``scored`` ranked 1..depth within each query_id by
+    (score desc, doc_id asc); the rank lands in ``col``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
+    return scored.withColumn(col, F.row_number().over(w)).where(
+        F.col(col) <= depth
+    )
+
+
+def _marker_postings(
+    docs_df: DataFrame, queries: list[tuple[int, list[str], str]]
+) -> DataFrame:
+    """(query_id, doc_id, tf): each query's marker-term postings — the
+    judgments of the multi-query evaluators."""
+    post = exact_postings(tokenized_docs(docs_df))
+    mdf = _markers_frame(docs_df.sparkSession, queries)
+    return post.join(F.broadcast(mdf), post["term"] == mdf["marker"]).select(
+        "query_id", "doc_id", "tf"
+    )
+
+
 def avg_precision_eval(
     docs_df: DataFrame,
     queries: list[tuple[int, list[str], str]],
@@ -610,38 +685,15 @@ def avg_precision_eval(
     regardless of aggregation order (the same order-proofing trick
     ndcg_eval gets from its sequential fold, without the fold).
 
-    Scale shape: contributions are computed ONCE over the union of all
-    query terms (a term's BM25 contribution is query-independent), then
-    fanned out to queries by a broadcast (query_id, term) join — Q
-    queries cost one postings pass, not Q. Ranked lists are per-query
-    windows over score-matched rows only; judgments join on a
-    marker-postings frame. One row out per query."""
-    all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    qterms = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts))]
-    spark = docs_df.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
-    mdf = spark.createDataFrame(
-        [(qid, m) for qid, _, m in queries], "query_id long, marker string"
+    Scale shape: one postings pass for all queries
+    (:func:`_multi_query_scores`); ranked lists are per-query windows
+    over score-matched rows only; judgments join on a marker-postings
+    frame. One row out per query."""
+    ranked = _rank_within(_multi_query_scores(docs_df, queries), k).select(
+        "query_id", "doc_id", "rank"
     )
-    contribs = bm25_contribs_from_corpus(docs_df, all_terms)
-    scored = (
-        contribs.join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "rank")
-    )
-    post = exact_postings(tokenized_docs(docs_df))
     rel = (
-        post.join(
-            F.broadcast(mdf), post["term"] == mdf["marker"]
-        )
+        _marker_postings(docs_df, queries)
         .select("query_id", "doc_id")
         .distinct()
     )
@@ -864,34 +916,14 @@ def rbp_eval(
     engines produce bit-equal doubles regardless of aggregation order
     (the avg_precision_eval LCM trick, binary edition).
 
-    Scale shape: identical to avg_precision_eval — contributions
-    computed once over the union of query terms, fanned out by a
-    broadcast (query_id, term) join, per-query windows over matched
-    rows only, one row out per query."""
-    all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    qterms = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts))]
-    spark = docs_df.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
-    mdf = spark.createDataFrame(
-        [(qid, m) for qid, _, m in queries], "query_id long, marker string"
+    Scale shape: one postings pass for all queries
+    (:func:`_multi_query_scores`), per-query windows over matched rows
+    only, one row out per query."""
+    ranked = _rank_within(_multi_query_scores(docs_df, queries), k).select(
+        "query_id", "doc_id", "rank"
     )
-    contribs = bm25_contribs_from_corpus(docs_df, all_terms)
-    scored = (
-        contribs.join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "rank")
-    )
-    post = exact_postings(tokenized_docs(docs_df))
     rel = (
-        post.join(F.broadcast(mdf), post["term"] == mdf["marker"])
+        _marker_postings(docs_df, queries)
         .select("query_id", "doc_id")
         .distinct()
     )
@@ -938,38 +970,22 @@ def hard_negatives(
     score rounds at emit; everything else is integer.
 
     Scale shape: one shared postings pass for all queries
-    (avg_precision_eval plan), relevance as a broadcast
+    (:func:`_multi_query_scores`), relevance as a broadcast
     marker-postings anti-join, per-query windows over matched rows
     only."""
-    all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    qterms = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts))]
-    spark = docs_df.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
-    mdf = spark.createDataFrame(
-        [(qid, m) for qid, _, m in queries], "query_id long, marker string"
-    )
-    contribs = bm25_contribs_from_corpus(docs_df, all_terms)
-    scored = (
-        contribs.join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    post = exact_postings(tokenized_docs(docs_df))
     rel = (
-        post.join(F.broadcast(mdf), post["term"] == mdf["marker"])
+        _marker_postings(docs_df, queries)
         .select("query_id", "doc_id")
         .distinct()
     )
-    negs = scored.join(rel, ["query_id", "doc_id"], "left_anti")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
+    negs = _multi_query_scores(docs_df, queries).join(
+        rel, ["query_id", "doc_id"], "left_anti"
     )
     return (
-        negs.withColumn("neg_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("neg_rank") <= n_neg)
+        _rank_within(negs, n_neg, "neg_rank")
         .select(
             "query_id",
-            "neg_rank",
+            F.col("neg_rank").cast("long").alias("neg_rank"),
             "doc_id",
             F.round("score", 6).alias("score"),
         )
@@ -1002,34 +1018,19 @@ def qpp_postretrieval(
     Exactness: fixed-shape double expressions over integer-derived
     scores; round(6) at emit.
 
-    Scale shape: the avg_precision_eval shared postings pass; the
-    predictors aggregate per-query score frames (matched rows only);
+    Scale shape: the :func:`_multi_query_scores` shared postings pass;
+    the predictors aggregate per-query score frames (matched rows only);
     one row out per query."""
-    all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    qterms = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts))]
-    spark = docs_df.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
-    qn = spark.createDataFrame(
+    qn = docs_df.sparkSession.createDataFrame(
         [(qid, len(sorted(set(ts)))) for qid, ts, _ in queries],
         "query_id long, nq int",
     )
-    contribs = bm25_contribs_from_corpus(docs_df, all_terms)
-    scored = (
-        contribs.join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
+    scored = _multi_query_scores(docs_df, queries)
     allstats = scored.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_matched"),
         F.avg("score").alias("mu_all"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    topk = scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-    kstats = topk.groupBy("query_id").agg(
+    kstats = _rank_within(scored, k).groupBy("query_id").agg(
         F.avg("score").alias("mu_k"),
         F.avg(F.col("score") * F.col("score")).alias("m2_k"),
     )
@@ -1075,16 +1076,11 @@ def pivoted_length_audit(
 
     Exactness: all shares are integer ratios, round(6).
 
-    Scale shape: the multi-query leg is avg_precision_eval's shared
-    postings pass; the decile assignment windows over the
+    Scale shape: the multi-query leg is the :func:`_multi_query_scores`
+    shared postings pass; the decile assignment windows over the
     DISTINCT-LENGTH frame (value-cardinality-bounded), never docs;
     the final join is deciles x retrievals on a bucket key."""
-    all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    qterms = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts))]
-    spark = docs_df.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
-    tok = tokenized_docs(docs_df)
-    dl = tok.select("doc_id", "doclen")
+    dl = tokenized_docs(docs_df).select("doc_id", "doclen")
     vals = dl.groupBy("doclen").agg(F.count(F.lit(1)).alias("cnt"))
     tot = vals.agg(F.sum("cnt").alias("total"))
     wv = Window.orderBy("doclen").rowsBetween(
@@ -1103,18 +1099,8 @@ def pivoted_length_audit(
         )
         .select("doclen", "bucket")
     )
-    contribs = bm25_contribs_from_corpus(docs_df, all_terms)
-    scored = (
-        contribs.join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
     retr = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= depth)
+        _rank_within(_multi_query_scores(docs_df, queries), depth)
         .join(dl, "doc_id")
         .join(buckets, "doclen")
         .groupBy("bucket")
@@ -1186,9 +1172,7 @@ def trec_pool(
     same (tf, doclen) frame), per-query windows rank match-only rows,
     and all set algebra runs over 2*d-row frames per query."""
     all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    qterms = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts))]
-    spark = docs_df.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
+    qdf = _query_terms_frame(docs_df.sparkSession, queries)
     tok = tokenized_docs(docs_df)
     post = exact_postings(tok)
     stats = tok.agg(
@@ -1306,34 +1290,14 @@ def err_eval(
     accumulator — the ndcg_eval discipline — making every double op
     IEEE-identical cross-engine; round(6) at emit.
 
-    Scale shape: same one-postings-pass multi-query plan as
-    avg_precision_eval; the fold runs over k-row collected lists
-    (post-limit), one row out per query."""
-    all_terms = sorted({t for _, ts, _ in queries for t in ts})
-    qterms = [(qid, t) for qid, ts, _ in queries for t in sorted(set(ts))]
-    spark = docs_df.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
-    mdf = spark.createDataFrame(
-        [(qid, m) for qid, _, m in queries], "query_id long, marker string"
+    Scale shape: the :func:`_multi_query_scores` one-postings-pass
+    plan; the fold runs over k-row collected lists (post-limit), one
+    row out per query."""
+    ranked = _rank_within(_multi_query_scores(docs_df, queries), k).select(
+        "query_id", "doc_id", "rank"
     )
-    contribs = bm25_contribs_from_corpus(docs_df, all_terms)
-    scored = (
-        contribs.join(F.broadcast(qdf), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "rank")
-    )
-    post = exact_postings(tokenized_docs(docs_df))
-    grades = (
-        post.join(F.broadcast(mdf), post["term"] == mdf["marker"])
-        .select("query_id", "doc_id", F.least("tf", F.lit(3)).alias("g"))
+    grades = _marker_postings(docs_df, queries).select(
+        "query_id", "doc_id", F.least("tf", F.lit(3)).alias("g")
     )
     judged = (
         ranked.join(grades, ["query_id", "doc_id"], "left")
@@ -3246,37 +3210,6 @@ def rescore_topk(
     )
 
 
-def _bm25_scores_from_tok(tok: DataFrame, terms: list[str]) -> DataFrame:
-    """(doc_id, score) BM25 over an arbitrary tokenized frame
-    (doc_id, tokens, doclen) — the per-FIELD scorer behind multi_match.
-    Field statistics follow Lucene: n_docs/avgdl/df are computed over
-    docs where the field is non-empty, independently per field."""
-    uniq = sorted(set(terms))
-    tok = tok.where(F.col("doclen") > 0)
-    agg = tok.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("tt")
-    ).collect()[0]
-    n_docs, avgdl = int(agg.n), float(agg.tt) / float(agg.n)
-    post = exact_postings(tok)
-    tstats = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    qpost = post.where(F.col("term").isin(uniq)).join(
-        F.broadcast(tstats.where(F.col("term").isin(uniq))), "term"
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
-    w = F.col("tf") / (
-        F.col("tf")
-        + F.lit(bm25.K1)
-        * (F.lit(1.0 - bm25.B) + F.lit(bm25.B) * F.col("doclen") / F.lit(avgdl))
-    )
-    return qpost.select("doc_id", (idf * w).alias("contrib")).groupBy(
-        "doc_id"
-    ).agg(F.sum("contrib").alias("score"))
-
-
 def multi_match_topk(
     spark: SparkSession,
     docs_df: DataFrame,
@@ -3294,6 +3227,10 @@ def multi_match_topk(
     disjoint, so the split is a real two-field corpus. best_fields
     combine = max + tie_breaker * min (dis_max over per-field scores).
 
+    Field statistics follow Lucene: n_docs/avgdl/df are computed over
+    docs where the field is non-empty, independently per field; each
+    field's stats are an in-plan aggregate of the same job.
+
     Scale shape: two independent field scorer plans (each: pushed
     term-IN scan, partial-agg shuffle on doc_id) + one full-outer join
     of the two sparse score frames; the title slice prunes the token
@@ -3310,12 +3247,15 @@ def multi_match_topk(
             f"greatest(size(tokens) - {title_len}, 0))"
         ).alias("tokens"),
     ).withColumn("doclen", F.size("tokens").cast("long"))
-    ts = _bm25_scores_from_tok(title, terms).select(
-        "doc_id", F.col("score").alias("ts")
-    )
-    bs = _bm25_scores_from_tok(body, terms).select(
-        "doc_id", F.col("score").alias("bs")
-    )
+
+    def field_score(field: DataFrame, name: str) -> DataFrame:
+        return (
+            _bm25_contribs(field.where(F.col("doclen") > 0), terms)
+            .groupBy("doc_id")
+            .agg(F.sum("contrib").alias(name))
+        )
+
+    ts, bs = field_score(title, "ts"), field_score(body, "bs")
     j = ts.join(bs, "doc_id", "full_outer").select(
         "doc_id",
         F.coalesce("ts", F.lit(0.0)).alias("t"),
@@ -4368,11 +4308,7 @@ def prf_expansion(
         ).alias("s"),
         F.count(F.lit(1)).alias("n_fb_docs"),
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(stats["n_docs"])) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
+    idf = idf_col(stats["n_docs"])
     return (
         per.join(tstats, "term")
         .select(

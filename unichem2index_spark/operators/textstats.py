@@ -7,13 +7,19 @@ oracle twin in ``__spark_entry__.oracle_sql``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from unichem2index_spark.functions.hashing import FP_MULT, MOD
 from unichem2index_spark.functions.tokenize import tokens_col
 from unichem2index_spark.operators.dedup import vocab_ids
+from unichem2index_spark.operators.query import (
+    _markers_frame,
+    _query_terms_frame,
+)
 
 # Marker-word sets for the n-gram/stopword language heuristic. The corpus
 # vocabulary is English-ish, so real-language discrimination is synthetic —
@@ -25,6 +31,77 @@ STOPWORDS = ["the", "a", "of", "and", "is", "to", "in"]
 
 def _tok(d: DataFrame) -> DataFrame:
     return d.select("doc_id", tokens_col("text").alias("tokens"), "text")
+
+
+class _Bm25Frame(NamedTuple):
+    """The textstats BM25 frame and the pieces it is joined from."""
+
+    scored: DataFrame  # doc_id, term, tf, df, doclen, n_docs, avgdl
+    tokf: DataFrame  # doc_id, term: one row per token
+    dl: DataFrame  # doc_id, doclen: docs with at least one token
+    stats: DataFrame  # n_docs, avgdl: one row
+    qtok: DataFrame  # the tokf rows of the query terms
+    dfs: DataFrame  # term, df: the query terms' document frequencies
+
+
+def _bm25_frame(d: DataFrame, terms) -> _Bm25Frame:
+    """BM25 inputs of every (doc, query term) match in ``d``'s text, in
+    the textstats convention: n_docs and avgdl count only docs with at
+    least one token (``dl`` is grouped from the token rows), as the
+    oracle SQL's ``dl AS (SELECT doc_id, count(*) FROM tokf GROUP BY 1)``
+    does. The query path (``query.bm25_contribs_from_corpus``) counts
+    every doc instead; the two differ by the token-less docs, so they
+    stay two helpers. Score with :func:`_bm25_weight`."""
+    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
+    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        (
+            F.sum("doclen").cast("double")
+            / F.count(F.lit(1)).cast("double")
+        ).alias("avgdl"),
+    )
+    qtok = tokf.where(F.col("term").isin(list(terms)))
+    dfs = (
+        qtok.select("term", "doc_id")
+        .distinct()
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    scored = (
+        qtok.groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .join(F.broadcast(dfs), "term")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+    )
+    return _Bm25Frame(scored, tokf, dl, stats, qtok, dfs)
+
+
+def _bm25_weight(b: float = 0.75) -> Column:
+    """idf x tf-norm (k1 = 1.2) over the columns of
+    :func:`_bm25_frame`'s ``scored`` frame: one term's BM25 contribution
+    to one doc. ``b`` is the length-normalization weight."""
+    idf = F.log(
+        F.lit(1.0)
+        + (
+            F.col("n_docs").cast("double")
+            - F.col("df").cast("double")
+            + F.lit(0.5)
+        )
+        / (F.col("df").cast("double") + F.lit(0.5))
+    )
+    tfn = F.col("tf").cast("double") / (
+        F.col("tf").cast("double")
+        + F.lit(1.2)
+        * (
+            F.lit(1.0 - b)
+            + F.lit(b)
+            * F.col("doclen").cast("double")
+            / F.col("avgdl")
+        )
+    )
+    return idf * tfn
 
 
 def lang_id(spark: SparkSession, t) -> DataFrame:
@@ -3671,40 +3748,11 @@ def quantize_fidelity(
     comparison run post-limit at k rows. The integer impact sums are
     exact on both engines; floor of the same fixed-shape double ties
     out bit-for-bit."""
-    d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    tf = (
-        tokf.where(F.col("term").isin(list(terms)))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    s = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs").cast("double") - F.col("df") + 0.5)
-        / (F.col("df") + 0.5)
-    ) * (
-        F.col("tf")
-        / (
-            F.col("tf")
-            + 1.2 * (0.25 + 0.75 * F.col("doclen") / F.col("avgdl"))
-        )
-    )
     scored = (
-        tf.join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", s.alias("s"))
+        _bm25_frame(t["documents"], terms)
+        .scored.select("doc_id", _bm25_weight().alias("s"))
+        .persist()
     )
-    scored = scored.persist()
     smax = scored.agg(F.max("s").alias("smax"))
     both = (
         scored.crossJoin(F.broadcast(smax))
@@ -4955,56 +5003,12 @@ def blockmax_tightness(
     doc_id div B so no extra shuffle key width — then a per-term agg
     over block rows. Postings-bounded at any corpus size."""
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    partial = (
-        F.log(
-            F.lit(1.0)
-            + (
-                F.col("n_docs").cast("double")
-                - F.col("df").cast("double")
-                + F.lit(0.5)
-            )
-            / (F.col("df").cast("double") + F.lit(0.5))
-        )
-        * (
-            F.col("tf").cast("double")
-            / (
-                F.col("tf").cast("double")
-                + F.lit(1.2)
-                * (
-                    F.lit(0.25)
-                    + F.lit(0.75)
-                    * F.col("doclen").cast("double")
-                    / F.col("avgdl")
-                )
-            )
-        )
-    )
     per_block = (
-        qtok.groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
+        _bm25_frame(d, terms)
+        .scored.select(
             "term",
             F.expr(f"doc_id div {block}").alias("blk"),
-            partial.alias("p"),
+            _bm25_weight().alias("p"),
         )
         .groupBy("term", "blk")
         .agg(F.max("p").alias("bmax"))
@@ -5142,10 +5146,8 @@ def norms_quant_audit(
     (the decoded doclen is a map-side expression); the rank
     comparison runs over two post-limit k-row lists."""
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("doclen")
-    ).withColumn(
+    bf = _bm25_frame(d, terms)
+    dl = bf.dl.withColumn(
         "dec",
         F.expr(
             "IF(doclen < 8, doclen,"
@@ -5170,13 +5172,7 @@ def norms_quant_audit(
             6,
         ).alias("avg_rel_err"),
     )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    # The exact weight again, with the decoded length in doclen's place.
     idf = F.log(
         F.lit(1.0)
         + (
@@ -5186,29 +5182,24 @@ def norms_quant_audit(
         )
         / (F.col("df").cast("double") + F.lit(0.5))
     )
-
-    def norm_of(len_col: str):
-        return F.col("tf").cast("double") / (
-            F.col("tf").cast("double")
-            + F.lit(1.2)
-            * (
-                F.lit(0.25)
-                + F.lit(0.75)
-                * F.col(len_col).cast("double")
-                / F.col("avgdl")
-            )
+    qtfn = F.col("tf").cast("double") / (
+        F.col("tf").cast("double")
+        + F.lit(1.2)
+        * (
+            F.lit(0.25)
+            + F.lit(0.75) * F.col("dec").cast("double") / F.col("avgdl")
         )
-
+    )
     scored = (
-        qtok.groupBy("doc_id", "term")
+        bf.qtok.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
+        .join(F.broadcast(bf.dfs), "term")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
         .agg(
-            F.sum(idf * norm_of("doclen")).alias("s_exact"),
-            F.sum(idf * norm_of("dec")).alias("s_quant"),
+            F.sum(_bm25_weight()).alias("s_exact"),
+            F.sum(idf * qtfn).alias("s_quant"),
         )
     )
 
@@ -5261,55 +5252,17 @@ def stopword_prune_audit(
     (the pruned score is a conditional sum over the same frame);
     set comparison over post-limit k-row lists."""
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
+    bf = _bm25_frame(d, terms)
+    w = _bm25_weight()
     keep = (
         F.col("df").cast("double")
         <= F.lit(STOPWORD_DF_FRAC) * F.col("n_docs").cast("double")
     )
     scored = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
+        bf.scored.groupBy("doc_id")
         .agg(
-            F.sum(idf * tfn).alias("s_full"),
-            F.sum(F.when(keep, idf * tfn).otherwise(F.lit(0.0))).alias(
+            F.sum(w).alias("s_full"),
+            F.sum(F.when(keep, w).otherwise(F.lit(0.0))).alias(
                 "s_pruned"
             ),
             F.max(keep.cast("int")).alias("any_kept"),
@@ -5329,7 +5282,7 @@ def stopword_prune_audit(
     overlap = full.join(pruned, "doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_overlap")
     )
-    scan = dfs.crossJoin(F.broadcast(stats)).agg(
+    scan = bf.dfs.crossJoin(F.broadcast(bf.stats)).agg(
         F.sum("df").cast("long").alias("postings_full"),
         F.sum(F.when(keep, F.col("df")).otherwise(F.lit(0)))
         .cast("long")
@@ -5431,49 +5384,10 @@ def bm25_prox_topk(
     QPS the same bonus folds into the WAND kernel as a rescore
     (rescore_topk pattern)."""
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
     bm = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * tfn).alias("bm25"))
+        _bm25_frame(d, terms)
+        .scored.groupBy("doc_id")
+        .agg(F.sum(_bm25_weight()).alias("bm25"))
     )
     pos = d.select(
         "doc_id", F.posexplode(tokens_col("text")).alias("pos", "term")
@@ -5971,49 +5885,10 @@ def serp_clusters(
     the default depth. Token sets ride along as sorted arrays only
     within this bounded frame."""
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
     top = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * tfn).alias("score"))
+        _bm25_frame(d, terms)
+        .scored.groupBy("doc_id")
+        .agg(F.sum(_bm25_weight()).alias("score"))
         .orderBy(F.desc("score"), "doc_id")
         .limit(k)
         .withColumn(
@@ -6097,49 +5972,10 @@ def rerank_depth_audit(
     plans) feeds every depth — the per-R work is window/limit over
     k-to-R-row frames, so auditing 3 depths costs one corpus pass."""
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
     bm = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * tfn).alias("bm25"))
+        _bm25_frame(d, terms)
+        .scored.groupBy("doc_id")
+        .agg(F.sum(_bm25_weight()).alias("bm25"))
     )
     pos = d.select(
         "doc_id", F.posexplode(tokens_col("text")).alias("pos", "term")
@@ -6300,67 +6136,20 @@ def bm25_param_sweep(
     queries = queries or SWEEP_QUERIES
     d = t["documents"]
     all_terms = sorted({t2 for _, ts, _ in queries for t2 in ts})
-    qterms = [
-        (qid, t2) for qid, ts, _ in queries for t2 in sorted(set(ts))
-    ]
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
-    mdf = spark.createDataFrame(
-        [(qid, m) for qid, _, m in queries],
-        "query_id long, marker string",
-    )
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(all_terms))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    base = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .join(F.broadcast(qdf), "term")
-    )
+    qdf = _query_terms_frame(spark, queries)
+    mdf = _markers_frame(spark, queries)
+    bf = _bm25_frame(d, all_terms)
+    base = bf.scored.join(F.broadcast(qdf), "term")
     rel = (
-        tokf.join(F.broadcast(mdf), tokf["term"] == mdf["marker"])
+        bf.tokf.join(F.broadcast(mdf), bf.tokf["term"] == mdf["marker"])
         .select("query_id", "doc_id")
         .distinct()
     )
     n_q = float(len(queries))
     out = None
     for b in SWEEP_BS:
-        tfn = F.col("tf").cast("double") / (
-            F.col("tf").cast("double")
-            + F.lit(1.2)
-            * (
-                F.lit(1.0 - b)
-                + F.lit(b)
-                * F.col("doclen").cast("double")
-                / F.col("avgdl")
-            )
-        )
         scored = base.groupBy("query_id", "doc_id").agg(
-            F.sum(idf * tfn).alias("score")
+            F.sum(_bm25_weight(b)).alias("score")
         )
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -6491,25 +6280,6 @@ def zscore_merge_audit(
         .groupBy("shard", "term")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
     scored = (
         qtok.groupBy("shard", "doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -6517,7 +6287,7 @@ def zscore_merge_audit(
         .join(dl, ["shard", "doc_id"])
         .join(stats, "shard")
         .groupBy("shard", "doc_id")
-        .agg(F.sum(idf * tfn).alias("s"))
+        .agg(F.sum(_bm25_weight()).alias("s"))
     )
     wloc = Window.partitionBy("shard").orderBy(
         F.desc("s"), F.asc("doc_id")
@@ -6732,64 +6502,20 @@ def judge_agreement_kappa(
     Exactness: confusion cells are integers; po/pe/kappa are
     fixed-shape ratios of integers over the constant k, round(6).
 
-    Scale shape: the avg_precision_eval shared postings pass ranks
-    all queries at once; judging joins a broadcast marker-tf frame
-    against k-row pages."""
+    Scale shape: one shared postings pass ranks all queries at once
+    (the :func:`_bm25_frame` fanned out by a broadcast (query_id, term)
+    join — the shape of ``query._multi_query_scores``); judging joins a
+    broadcast marker-tf frame against k-row pages."""
     d = t["documents"]
     queries = KAPPA_QUERIES
     all_terms = sorted({t2 for _, ts, _ in queries for t2 in ts})
-    qterms = [
-        (qid, t2) for qid, ts, _ in queries for t2 in sorted(set(ts))
-    ]
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
-    mdf = spark.createDataFrame(
-        [(qid, m) for qid, _, m in queries],
-        "query_id long, marker string",
-    )
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(all_terms))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
+    qdf = _query_terms_frame(spark, queries)
+    mdf = _markers_frame(spark, queries)
+    bf = _bm25_frame(d, all_terms)
     scored = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .join(F.broadcast(qdf), "term")
+        bf.scored.join(F.broadcast(qdf), "term")
         .groupBy("query_id", "doc_id")
-        .agg(F.sum(idf * tfn).alias("score"))
+        .agg(F.sum(_bm25_weight()).alias("score"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
@@ -6798,7 +6524,7 @@ def judge_agreement_kappa(
         F.col("rn") <= k
     )
     mtf = (
-        tokf.join(F.broadcast(mdf), tokf["term"] == mdf["marker"])
+        bf.tokf.join(F.broadcast(mdf), bf.tokf["term"] == mdf["marker"])
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("mtf"))
     )
@@ -7101,53 +6827,10 @@ def generation_rank_drift(
     d = t["documents"]
 
     def topk(docs) -> DataFrame:
-        tokf = docs.select(
-            "doc_id", F.explode(tokens_col("text")).alias("term")
-        )
-        dl = tokf.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("doclen")
-        )
-        stats = dl.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            (
-                F.sum("doclen").cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("avgdl"),
-        )
-        qtok = tokf.where(F.col("term").isin(list(terms)))
-        dfs = (
-            qtok.select("term", "doc_id")
-            .distinct()
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-        )
-        idf = F.log(
-            F.lit(1.0)
-            + (
-                F.col("n_docs").cast("double")
-                - F.col("df").cast("double")
-                + F.lit(0.5)
-            )
-            / (F.col("df").cast("double") + F.lit(0.5))
-        )
-        tfn = F.col("tf").cast("double") / (
-            F.col("tf").cast("double")
-            + F.lit(1.2)
-            * (
-                F.lit(0.25)
-                + F.lit(0.75)
-                * F.col("doclen").cast("double")
-                / F.col("avgdl")
-            )
-        )
         scored = (
-            qtok.groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .join(F.broadcast(dfs), "term")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(stats))
-            .groupBy("doc_id")
-            .agg(F.sum(idf * tfn).alias("score"))
+            _bm25_frame(docs, terms)
+            .scored.groupBy("doc_id")
+            .agg(F.sum(_bm25_weight()).alias("score"))
         )
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         return (
@@ -7202,51 +6885,11 @@ def post_filter_facets(
     pushed into the page window only) — the exact double-use ES
     executes post_filter with."""
     d = t["documents"]
-    tokf = d.select(
-        "doc_id", "lang", F.explode(tokens_col("text")).alias("term")
-    )
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
     scored = (
-        qtok.groupBy("doc_id", "lang", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id", "lang")
-        .agg(F.sum(idf * tfn).alias("score"))
+        _bm25_frame(d, terms)
+        .scored.groupBy("doc_id")
+        .agg(F.sum(_bm25_weight()).alias("score"))
+        .join(d.select("doc_id", "lang"), "doc_id")
     )
     facets = scored.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_matched")
@@ -7367,54 +7010,20 @@ def taat_accumulator_audit(
     costs a k-row set compare. The real TAAT engine bounds MEMORY by
     A — here A bounds the frame the window admits, same contract."""
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    bf = _bm25_frame(d, terms)
     wphase = Window.orderBy(F.asc("df"), F.asc("term"))
-    phases = dfs.withColumn(
+    phases = bf.dfs.withColumn(
         "phase", F.row_number().over(wphase).cast("long")
     ).select("term", "df", "phase")
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
     scored = (
-        qtok.groupBy("doc_id", "term")
+        bf.qtok.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
         .join(F.broadcast(phases), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .join(bf.dl, "doc_id")
+        .crossJoin(F.broadcast(bf.stats))
         .groupBy("doc_id")
         .agg(
-            F.sum(idf * tfn).alias("score"),
+            F.sum(_bm25_weight()).alias("score"),
             F.min("phase").cast("long").alias("first_phase"),
         )
     )
@@ -7484,48 +7093,8 @@ def jass_anytime_audit(
     query-postings-bounded frame), and every budget row; each rho
     costs one k-row set compare."""
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
-    partials = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "term", (idf * tfn).alias("p"))
+    partials = _bm25_frame(d, terms).scored.select(
+        "doc_id", "term", _bm25_weight().alias("p")
     )
     gmax = partials.agg(F.max("p").alias("gmax"))
     quant = partials.crossJoin(F.broadcast(gmax)).select(
@@ -7688,50 +7257,11 @@ def query_reduction_audit(
         "vid long, terms string",
     )
     all_terms = sorted(set(base))
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(all_terms))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
+    bf = _bm25_frame(d, all_terms)
     scored = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .join(F.broadcast(vdf), "term")
+        bf.scored.join(F.broadcast(vdf), "term")
         .groupBy("vid", "doc_id")
-        .agg(F.sum(idf * tfn).alias("score"))
+        .agg(F.sum(_bm25_weight()).alias("score"))
     )
     allstats = scored.groupBy("vid").agg(
         F.count(F.lit(1)).cast("long").alias("n_matched"),
@@ -7748,7 +7278,7 @@ def query_reduction_audit(
         F.avg(F.col("score") * F.col("score")).alias("m2_k"),
     )
     rel = (
-        tokf.where(F.col("term") == QRED_MARKER)
+        bf.tokf.where(F.col("term") == QRED_MARKER)
         .select("doc_id")
         .distinct()
     )
@@ -7811,49 +7341,10 @@ def prior_mix_audit(
     from unichem2index_spark.functions.hashing import FP_MULT, MOD
 
     d = t["documents"]
-    tokf = d.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    dl = tokf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.sum("doclen").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-    )
-    qtok = tokf.where(F.col("term").isin(list(terms)))
-    dfs = (
-        qtok.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (
-            F.col("n_docs").cast("double")
-            - F.col("df").cast("double")
-            + F.lit(0.5)
-        )
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    tfn = F.col("tf").cast("double") / (
-        F.col("tf").cast("double")
-        + F.lit(1.2)
-        * (
-            F.lit(0.25)
-            + F.lit(0.75)
-            * F.col("doclen").cast("double")
-            / F.col("avgdl")
-        )
-    )
     bm = (
-        qtok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(F.broadcast(dfs), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * tfn).alias("bm25"))
+        _bm25_frame(d, terms)
+        .scored.groupBy("doc_id")
+        .agg(F.sum(_bm25_weight()).alias("bm25"))
     )
     docs = d.select("doc_id")
     n_df = docs.agg(F.count(F.lit(1)).alias("n"))
