@@ -1,12 +1,15 @@
-"""Shared per-shard query plumbing: Spark jobs per hot call, and a term
-that has segment rows but no term_stats row.
+"""Shared per-shard query plumbing: Spark jobs per hot call, the plan of a
+hot call, and a term that has segment rows but no term_stats row.
 
-* A hot call on a cached handle runs a fixed number of Spark jobs: the idf
-  collect and the query job, plus the tombstone read and shuffle once the
-  index has deletes. A change to the per-shard primitive that adds an
-  exchange or a helper job shows up here.
-* A segment term without a stats row is "absent" on every path: the batch
-  kernel answers like the single-query WAND kernel instead of raising.
+* A hot WAND or phrase call on a cached handle is one Spark job, on a
+  never-updated index and on one with tombstones: idf rides the cached
+  segment rows and the tombstones are cached partitioned by shard like
+  them, so the call needs no idf collect, no tombstone read and no
+  exchange. A change to the per-shard primitive that adds an exchange or
+  a helper job shows up here.
+* A segment term without a stats row is "absent" on every path and with
+  or without the cache: the batch and boosted kernels answer as if the
+  term were not queried, and a phrase with it matches nothing.
 * Building a corpus-path ranker's DataFrame runs no Spark job: corpus and
   field statistics are aggregates inside the query's own plan.
 """
@@ -17,6 +20,7 @@ import itertools
 
 import pytest
 
+from unichem2index_spark.functions.tokenize import tokenize
 from unichem2index_spark.operators import query as Q
 from unichem2index_spark.operators.ingest import build_index_from_webtext
 from unichem2index_spark.operators.update import delete_by_query
@@ -47,51 +51,115 @@ def count_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def hot_job_counts(spark, index_dir: str) -> dict[str, int]:
+def exchanges_below_python_node(df) -> list[str]:
+    """Collect ``df``, then list the exchange nodes of its executed plan
+    that sit below a per-shard Python node (FlatMap[Co]GroupsInPandas).
+    A cached frame's own plan is not a child of its scan, so the exchange
+    that built the cache is not counted."""
+    df.collect()
+    found, python_nodes = [], []
+
+    def walk(node, below: bool) -> None:
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), below)
+        if name.endswith("QueryStageExec"):  # AQE wrapper of one subplan
+            return walk(node.plan(), below)
+        if below and "Exchange" in name:
+            found.append(name)
+        if "InPandas" in name:
+            python_nodes.append(name)
+            below = True
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), below)
+
+    walk(df._jdf.queryExecution().executedPlan(), False)
+    assert python_nodes, "no per-shard Python node in the plan"
+    return found
+
+
+def hot_calls(spark, index_dir: str):
+    """Job counts and below-Python exchanges of hot calls on a cached
+    handle, after one warm-up round (Python workers, cached scans)."""
     h = Q.IndexHandle.open(spark, index_dir, cache=True)
-    calls = {
-        "wand": lambda: Q.bm25_topk_wand(spark, h, *WAND).collect(),
-        "phrase": lambda: Q.phrase_topk(spark, h, *PHRASE).collect(),
-        "batch": lambda: Q.bm25_topk_batch(spark, h, BATCH).collect(),
+    frames = {
+        "wand": lambda: Q.bm25_topk_wand(spark, h, *WAND),
+        "phrase": lambda: Q.phrase_topk(spark, h, *PHRASE),
+        "batch": lambda: Q.bm25_topk_batch(spark, h, BATCH),
     }
     try:
-        for call in calls.values():  # warm: Python workers, cached scans
-            call()
-        return {name: count_jobs(spark, call) for name, call in calls.items()}
+        for frame in frames.values():
+            frame().collect()
+        jobs = {
+            name: count_jobs(spark, lambda f=frame: f().collect())
+            for name, frame in frames.items()
+        }
+        exchanges = {
+            name: exchanges_below_python_node(frames[name]())
+            for name in ("wand", "phrase")
+        }
+        return jobs, exchanges
     finally:
         h.close()
 
 
 @pytest.fixture(scope="module")
-def job_counts(spark, tmp_path_factory):
+def hot(spark, tmp_path_factory):
     rows = gen_webtext(200, seed=42)
     base = spark.createDataFrame(rows, schema=WEBTEXT_SCHEMA).repartition(4)
     out = str(tmp_path_factory.mktemp("jobs_index"))
     build_index_from_webtext(spark, base, out, n_shards=4, positions=True)
-    fresh = hot_job_counts(spark, out)
+    fresh = hot_calls(spark, out)
     res = delete_by_query(spark, out, "doclen >= 60", build_id="t-jobs")
     assert res.n_replaced > 0
-    return {"fresh": fresh, "tombstoned": hot_job_counts(spark, out)}
+    return {"fresh": fresh, "tombstoned": hot_calls(spark, out)}
 
 
 @pytest.mark.parametrize(
     "state, expected",
     [
-        ("fresh", {"wand": 2, "phrase": 2, "batch": 6}),
-        ("tombstoned", {"wand": 4, "phrase": 4, "batch": 8}),
+        ("fresh", {"wand": 1, "phrase": 1, "batch": 4}),
+        ("tombstoned", {"wand": 1, "phrase": 1, "batch": 4}),
     ],
 )
-def test_hot_call_job_counts(job_counts, state, expected):
-    assert job_counts[state] == expected
+def test_hot_call_job_counts(hot, state, expected):
+    assert hot[state][0] == expected
 
 
-def test_missing_stats_row_means_term_absent(spark, tmp_path_factory):
+@pytest.mark.parametrize("state", ["fresh", "tombstoned"])
+def test_hot_call_plan_has_no_exchange_below_the_shard_kernel(hot, state):
+    assert hot[state][1] == {"wand": [], "phrase": []}
+
+
+def _hits(df) -> list[tuple[int, float]]:
+    return [(r.doc_id, r.score) for r in df.collect()]
+
+
+@pytest.fixture(scope="module")
+def missing_stats_index(spark, tmp_path_factory):
+    """A positional index whose term_stats lost the row of ``merge`` (its
+    segment rows stay), and a phrase with ``merge`` that matched before."""
     rows = gen_webtext(120, seed=7)
     base = spark.createDataFrame(rows, schema=WEBTEXT_SCHEMA).repartition(2)
     out = str(tmp_path_factory.mktemp("missing_stats"))
-    build_index_from_webtext(spark, base, out, n_shards=2)
-    store = Q.IndexHandle.open(spark, out).store
+    build_index_from_webtext(spark, base, out, n_shards=2, positions=True)
+    h = Q.IndexHandle.open(spark, out)
     dropped = "merge"
+    followers = sorted(
+        {
+            toks[i + 1]
+            for toks in (tokenize(r["text"]) for r in rows)
+            for i in range(len(toks) - 1)
+            if toks[i] == dropped
+        }
+    )
+    phrase = next(
+        [dropped, nxt]
+        for nxt in followers
+        if _hits(Q.phrase_topk(spark, h, [dropped, nxt], 10))
+    )
+    store = h.store
     ts = store.read(spark, "term_stats")
     assert ts.where(ts.term == dropped).count() == 1
     # Rewrite term_stats without one queried term; its segment rows stay.
@@ -99,21 +167,36 @@ def test_missing_stats_row_means_term_absent(spark, tmp_path_factory):
     mf = store.read_manifest()
     mf.setdefault("tables", {})["term_stats"] = phys
     store.write_manifest(mf)
+    return out, dropped, phrase
 
-    h = Q.IndexHandle.open(spark, out)
-    terms, k = ["the", dropped, "vector"], 10
-    exp = [
-        (r.doc_id, r.score)
-        for r in Q.bm25_topk_wand(spark, h, terms, k).collect()
-    ]
-    assert exp
-    got = [
-        (r.doc_id, r.score)
-        for r in Q.bm25_topk_batch(
-            spark, h, [{"query_id": 0, "terms": terms, "k": k}]
-        ).collect()
-    ]
-    assert got == exp
+
+@pytest.mark.parametrize("cache", [False, True], ids=["uncached", "cached"])
+def test_missing_stats_row_means_term_absent(spark, missing_stats_index, cache):
+    out, dropped, phrase = missing_stats_index
+    h = Q.IndexHandle.open(spark, out, cache=cache)
+    try:
+        terms, live, k = ["the", dropped, "vector"], ["the", "vector"], 10
+        exp = _hits(Q.bm25_topk_wand(spark, h, live, k))
+        assert exp
+        assert _hits(Q.bm25_topk_wand(spark, h, terms, k)) == exp
+        got = _hits(
+            Q.bm25_topk_batch(
+                spark, h, [{"query_id": 0, "terms": terms, "k": k}]
+            )
+        )
+        assert got == exp
+        boosted = _hits(
+            Q.bm25_topk_wand(
+                spark, h, terms, k, boosts={"the": 2.0, dropped: 3.0}
+            )
+        )
+        assert boosted == _hits(
+            Q.bm25_topk_wand(spark, h, live, k, boosts={"the": 2.0})
+        )
+        assert boosted != exp
+        assert _hits(Q.phrase_topk(spark, h, phrase, k)) == []
+    finally:
+        h.close()
 
 
 RANK_QUERIES = [(0, ["merge", "group"], "key"), (1, ["the", "vector"], "merge")]
@@ -135,6 +218,9 @@ CORPUS_RANKERS = {
         docs, RANK_QUERIES
     ),
     "err_eval": lambda spark, docs: Q.err_eval(docs, RANK_QUERIES),
+    "prf_expansion": lambda spark, docs: Q.prf_expansion(
+        docs, ["merge", "group"], 5, 10
+    ),
 }
 
 

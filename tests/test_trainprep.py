@@ -2152,6 +2152,15 @@ def test_quantize_fidelity_recompute(spark, corpus, tables):
     assert row.overlap_at_k >= 10
 
 
+def test_quantize_fidelity_leaves_no_persisted_frame(spark, tables):
+    # Query terms no other test uses: a plan already cached by an earlier
+    # call would be reused and hide a new persist.
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    textstats.quantize_fidelity(spark, tables, terms=("key", "group")).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_shard_idf_drift_recompute(spark, corpus, tables):
     import math as _m
 

@@ -112,13 +112,15 @@ def corpus_stats(tok: DataFrame) -> dict:
     }
 
 
-def idf_col(n_docs: int) -> F.Column:
+def idf_col(n_docs: int | F.Column) -> F.Column:
     """Shared idf expression. Deliberately log(1+x), NOT log1p: every
     engine (Spark, DuckDB ln(1+x), Python math.log(1+x)) evaluates the
-    same floating-point expression tree."""
+    same floating-point expression tree. ``n_docs`` is a driver-side
+    count or a double column (an in-plan aggregate)."""
+    n = n_docs if isinstance(n_docs, F.Column) else F.lit(float(n_docs))
     return F.log(
         F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
+        + (n - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
     )
 

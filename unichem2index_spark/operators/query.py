@@ -1784,15 +1784,24 @@ class IndexHandle:
     generations: list[int] | None = None
     has_positions: bool = False
     _segments_cached: DataFrame | None = None
-    _term_stats_cached: DataFrame | None = None
+    _deletes_cached: DataFrame | None = None
 
     @staticmethod
     def open(
         spark: SparkSession, index_dir: str, cache: bool = False
     ) -> "IndexHandle":
-        """``cache=True`` pins segments + term_stats in executor memory for
-        a query-serving session (the ES hot-index analog); queries then skip
-        the per-request parquet scan. Call :meth:`close` to release."""
+        """A handle on the index as committed at open time: generations,
+        n_docs and avgdl come from the manifest read here, so rows of a
+        generation committed later are never read through it.
+
+        ``cache=True`` pins the segment rows (with their ``idf`` column)
+        and the (shard, doc_id) tombstones in executor memory for a
+        query-serving session (the ES hot-index analog), both
+        hash-partitioned by shard like every query kernel's grouping: a
+        hot call is then one exchange-free Spark job, with no parquet
+        scan, idf lookup or tombstone read of its own. The cached idf and
+        tombstones are those of open time too; an uncached handle reads
+        term_stats anew on each call. Call :meth:`close` to release."""
         store = SegmentStore(index_dir)
         mf = store.read_manifest()
         h = IndexHandle(
@@ -1805,35 +1814,29 @@ class IndexHandle:
         )
         if cache:
             # Cache PRE-PARTITIONED by shard: every query path ends in
-            # groupBy("shard").applyInPandas, and a cached
-            # HashPartitioning(shard, n) is reused by that grouping —
-            # the per-request plan becomes ONE exchange-free stage
-            # (TakeOrdered <- FlatMapGroupsInPandas <- Sort(local) <-
-            # Filter <- InMemoryTableScan). Without it every query pays
-            # a shuffle that AQE's bytes-based coalescing then collapses
-            # to a SINGLE partition (the posting blocks are a few KB,
-            # but the per-shard Python kernel cost is invisible to
-            # byte stats) — measured 2x on the hot 20-query set and
-            # 2.6x on the batch path at sf0.1.
-            h._segments_cached = h.segments(spark).persist()
-            # term_stats serves per-query idf lookups of a handful of
-            # terms: one cached partition turns the per-request collect
-            # into a single task (8 tasks -> 1, ~35 ms/query at sf0.1).
-            # Cached-batch min/max stats still prune the scan within the
-            # partition, so a large vocabulary costs batch-stat checks,
-            # not a full scan.
-            h._term_stats_cached = (
-                store.read(spark, "term_stats").coalesce(1).persist()
-            )
+            # groupBy("shard").applyInPandas (or a cogroup with the
+            # tombstones), and a cached HashPartitioning(shard, n) is
+            # reused by that grouping — the per-request plan becomes ONE
+            # exchange-free stage (TakeOrdered <- FlatMapGroupsInPandas
+            # <- Sort(local) <- Filter <- InMemoryTableScan). Without it
+            # every query pays a shuffle that AQE's bytes-based
+            # coalescing then collapses to a SINGLE partition (the
+            # posting blocks are a few KB, but the per-shard Python
+            # kernel cost is invisible to byte stats) — measured 2x on
+            # the hot 20-query set and 2.6x on the batch path at sf0.1.
+            seg, dele = h.segments(spark), h._tombstones(spark)
+            h._segments_cached = seg.persist()
             h._segments_cached.count()  # materialize eagerly
-            h._term_stats_cached.count()
+            if dele is not None:
+                h._deletes_cached = dele.persist()
+                h._deletes_cached.count()
         return h
 
     def close(self) -> None:
-        for df in (self._segments_cached, self._term_stats_cached):
+        for df in (self._segments_cached, self._deletes_cached):
             if df is not None:
                 df.unpersist()
-        self._segments_cached = self._term_stats_cached = None
+        self._segments_cached = self._deletes_cached = None
 
     @property
     def multi_gen(self) -> bool:
@@ -1851,6 +1854,15 @@ class IndexHandle:
         """Committed generations only: partitions written by an in-flight
         or crashed update are pruned by the gen filter.
 
+        Each row carries its term's ``idf`` from a left join of
+        ``term_stats(term, idf)`` — one row per term, so the row count is
+        the segment table's; a term with no stats row gets a null idf,
+        which every kernel reads as "term absent" (the ES term-dictionary
+        analog: docFreq sits beside the postings pointer, so no query
+        needs a separate stats lookup). The join precedes the shard
+        repartition, so the cached frame keeps its partitioning; a
+        ``term IN`` filter on top is pushed into both scans.
+
         Always returned hash-partitioned by ``shard`` with an EXPLICIT
         partition count (REPARTITION_BY_NUM): every consumer groups by
         shard for a per-shard Python kernel, and without the pin AQE's
@@ -1862,13 +1874,14 @@ class IndexHandle:
         Catalyst, so predicate pushdown to parquet is unaffected."""
         if self._segments_cached is not None:
             return self._segments_cached
-        return self.store.read_committed(
-            spark, "segments", self.generations or [0]
-        ).repartition(self._shard_partitions(spark), "shard")
+        idf = self.term_stats(spark).select("term", "idf")
+        return (
+            self.store.read_committed(spark, "segments", self.generations or [0])
+            .join(idf, "term", "left")
+            .repartition(self._shard_partitions(spark), "shard")
+        )
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
-        if self._term_stats_cached is not None:
-            return self._term_stats_cached
         return self.store.read(spark, "term_stats")
 
     def docs(self, spark: SparkSession) -> DataFrame:
@@ -1886,15 +1899,27 @@ class IndexHandle:
             spark, "deletes", self.generations or [0]
         ).select("doc_id")
 
+    def _tombstones(self, spark: SparkSession) -> DataFrame | None:
+        """(shard, doc_id) tombstones partitioned like :meth:`segments`,
+        or None when the index has none; a cached handle's own frame."""
+        if self._segments_cached is not None:
+            return self._deletes_cached
+        dele = self.deletes(spark)
+        if dele is None:
+            return None
+        return dele.select(self._shard_col(), "doc_id").repartition(
+            self._shard_partitions(spark), "shard"
+        )
+
     def deletes_by_shard(self, spark: SparkSession) -> DataFrame:
         """(shard, doc_id) tombstones for per-shard cogrouping — the
         executor-side analog of Lucene's per-segment live-docs bitmap
         (shard = doc_id % n_shards, the index's doc-sharding function).
         Empty DataFrame when the index has no tombstones."""
-        dele = self.deletes(spark)
+        dele = self._tombstones(spark)
         if dele is None:
             return spark.createDataFrame([], "shard int, doc_id long")
-        return dele.select(self._shard_col(), "doc_id")
+        return dele
 
     def _shard_col(self):
         """The index's doc-sharding function, as a ``shard`` column."""
@@ -1944,14 +1969,13 @@ class IndexHandle:
         if side is not None:
             fn = run
         else:
-            dele = self.deletes(spark)
-            if dele is None:
+            side = self._tombstones(spark)
+            if side is None:
                 # Never-updated index: skip the cogroup's extra (empty)
                 # grouped side — per-query latency, the serving hot path.
                 return seg.groupBy("shard").applyInPandas(
                     lambda pdf: run(pdf, frozenset()), schema
                 )
-            side = dele.select(self._shard_col(), "doc_id")
 
             def fn(pdf: pd.DataFrame, dele_pdf: pd.DataFrame) -> pd.DataFrame:
                 return run(pdf, frozenset(int(x) for x in dele_pdf["doc_id"]))
@@ -1966,7 +1990,8 @@ class IndexHandle:
 def _segment_scan(
     spark: SparkSession, index: IndexHandle, terms, cols: list[str]
 ) -> DataFrame:
-    """The query terms' segment rows, pruned to the kernel's columns."""
+    """The query terms' segment rows (with their ``idf``), pruned to the
+    kernel's columns."""
     return index.segments(spark).where(F.col("term").isin(list(terms))).select(
         *cols
     )
@@ -1975,9 +2000,16 @@ def _segment_scan(
 def _collect_idfs(
     spark: SparkSession, index: IndexHandle, terms: list[str]
 ) -> dict[str, float]:
-    """idf per query term that has a term_stats row — the one idf lookup
-    of the query path (a term without a row is absent from the index).
-    Tiny driver-side collect of <= |query| rows (broadcast analog)."""
+    """idf per term that has a term_stats row, collected to the driver.
+    Kernels read idf from their shard's segment rows instead; this helper
+    serves only planners that choose terms or blend idfs across terms
+    before the plan exists:
+
+    * :func:`more_like_this` picks the source doc's top terms by tf·idf;
+    * :func:`span_near_or_topk` scores each group with its members'
+      minimum idf, which one shard cannot know;
+    * :func:`match_phrase_prefix_topk` does the same for its expansion
+      group."""
     ts = (
         index.term_stats(spark)
         .where(F.col("term").isin(sorted(set(terms))))
@@ -1987,11 +2019,18 @@ def _collect_idfs(
     return {r.term: float(r.idf) for r in ts}
 
 
+def _shard_idfs(pdf: pd.DataFrame) -> dict[str, float]:
+    """idf per term of a shard's segment rows; a null idf (no term_stats
+    row) leaves the term out: absent, never a lookup error."""
+    ts = pdf[["term", "idf"]].dropna().drop_duplicates("term")
+    return {str(t): float(v) for t, v in zip(ts["term"], ts["idf"])}
+
+
 # The WAND kernels read exactly these columns; pruning them out of the
 # grouped Arrow transfer matters on POSITIONAL indexes, whose segments
 # carry a positions blob the BM25 paths never touch.
 _WAND_COLS = [
-    "gen", "shard", "term", "block_id", "max_doc_id",
+    "gen", "shard", "term", "idf", "block_id", "max_doc_id",
     "doc_gaps", "tfs", "dls", "block_max_tf", "block_min_dl",
     "block_max_score",
 ]
@@ -2029,16 +2068,20 @@ def _cursors_from_group(
 
 def _term_cursors(
     pdf: pd.DataFrame,
-    idfs: dict[str, float],
     avgdl: float,
     use_stored_bounds: bool,
+    boosts: dict[str, float] | None = None,
 ) -> dict[str, TermBlocks]:
-    """One cursor per term of a shard's segment rows, in term order.
-    Terms without an idf are skipped: a segment term with no term_stats
-    row is absent from the query, never a lookup error."""
+    """One cursor per term of a shard's segment rows, in term order, at
+    the rows' idf times the term's boost. Terms with a null idf are
+    skipped: a segment term with no term_stats row is absent from the
+    query, never a lookup error."""
+    boosts = boosts or {}
+    idfs = _shard_idfs(pdf)
     return {
         str(t): _cursors_from_group(
-            g, str(t), idfs[str(t)], avgdl, use_stored_bounds
+            g, str(t), idfs[str(t)] * float(boosts.get(str(t), 1.0)),
+            avgdl, use_stored_bounds,
         )
         for t, g in pdf.groupby("term", sort=True)
         if str(t) in idfs
@@ -2048,11 +2091,12 @@ def _term_cursors(
 def _per_shard_wand(
     spark: SparkSession,
     index: IndexHandle,
-    idfs: dict[str, float],
+    terms,
     depth: int,
     min_match: int = 1,
     after: tuple[float, int] | None = None,
     use_stored_bounds: bool | None = None,
+    boosts: dict[str, float] | None = None,
 ) -> DataFrame:
     """Raw per-shard WAND candidates (doc_id, UNROUNDED score): the shared
     tail of every WAND query — pushed ``term IN`` segment scan, tombstone
@@ -2069,13 +2113,13 @@ def _per_shard_wand(
     avgdl = index.avgdl
 
     def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        cursors = _term_cursors(pdf, idfs, avgdl, use_stored_bounds)
+        cursors = _term_cursors(pdf, avgdl, use_stored_bounds, boosts)
         return wand_topk(
             list(cursors.values()), avgdl, depth, deleted=deleted,
             min_match=min_match, after=after,
         )
 
-    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
     return index.per_shard(spark, seg, fn, TOPK_SCHEMA)
 
 
@@ -2102,28 +2146,22 @@ def bm25_topk_wand(
     it per-query the same way. min_match=1 is exactly the plain query.
 
     ``boosts``: per-term multipliers (ES ``term^boost``) folded into each
-    term's idf BEFORE it reaches the kernel, so scoring and pivot logic
-    are untouched. Stored block bounds were computed with unboosted idf —
-    a boost > 1 would make them under-estimates (inadmissible pruning) —
-    so any boosted query recomputes bounds from the monotone
-    (block_max_tf, block_min_dl) pair under the boosted idf, exactly the
-    multi-generation fallback path.
+    term's idf inside the kernel before its cursor is built, so scoring
+    and pivot logic are untouched. Stored block bounds were computed with
+    unboosted idf — a boost > 1 would make them under-estimates
+    (inadmissible pruning) — so any boosted query recomputes bounds from
+    the monotone (block_max_tf, block_min_dl) pair under the boosted idf,
+    exactly the multi-generation fallback path.
     """
     if min_match > len(set(terms)):
         return spark.createDataFrame([], TOPK_SCHEMA)
-    boosts = boosts or {}
-    idfs = {
-        t: v * float(boosts.get(t, 1.0))
-        for t, v in _collect_idfs(spark, index, terms).items()
-    }
-    if not idfs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
     per_shard = _per_shard_wand(
-        spark, index, idfs, k, min_match=min_match,
+        spark, index, terms, k, min_match=min_match,
         # stored bounds are tight AND valid only while stats match the
         # build (and the query is unboosted); any later generation or a
         # boosted term invalidates them.
         use_stored_bounds=not index.multi_gen and not boosts,
+        boosts=boosts,
     )
     return _merge_topk(per_shard, k)
 
@@ -2148,17 +2186,14 @@ def bm25_topk_maxscore(
     Scale shape: identical to the WAND path — the kernel choice is
     per-shard-local and changes nothing about the scan, the shuffle, or
     the candidate merge."""
-    idfs = _collect_idfs(spark, index, terms)
-    if not idfs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
     use_stored = not index.multi_gen
     avgdl = index.avgdl
 
     def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        cursors = _term_cursors(pdf, avgdl, use_stored)
         return maxscore_topk(list(cursors.values()), avgdl, k, deleted=deleted)
 
-    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
     return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
 
 
@@ -2167,24 +2202,18 @@ _BATCH_SCHEMA = T.StructType(
         T.StructField("query_id", T.IntegerType()),
         T.StructField("doc_id", T.LongType()),
         T.StructField("score", T.DoubleType()),
+        T.StructField("k", T.IntegerType()),
     ]
 )
 
 
-def _merge_batch(
-    spark: SparkSession, per_shard: DataFrame, queries: list[dict]
-) -> DataFrame:
+def _merge_batch(per_shard: DataFrame) -> DataFrame:
     """Per-query top-k merge of a batch's per-shard candidates: one
     global window per query_id over <= n_shards * k rows, each query's
-    own k joined in as a broadcast (query_id, k) frame."""
-    ks = {int(q["query_id"]): int(q["k"]) for q in queries}
-    k_df = spark.createDataFrame(
-        [(q, k) for q, k in ks.items()], "query_id int, k int"
-    )
+    own k carried on its candidate rows."""
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         per_shard.withColumn("rank", F.row_number().over(w))
-        .join(F.broadcast(k_df), "query_id")
         .where(F.col("rank") <= F.col("k"))
         .select(
             "query_id",
@@ -2217,9 +2246,8 @@ def bm25_topk_batch(
         return spark.createDataFrame(
             [], "query_id int, rank int, doc_id long, score double"
         )
-    idfs = _collect_idfs(spark, index, all_terms)
     qspec = [
-        (int(q["query_id"]), sorted({t for t in q["terms"] if t in idfs}), int(q["k"]))
+        (int(q["query_id"]), sorted(set(q["terms"])), int(q["k"]))
         for q in queries
     ]
     avgdl = index.avgdl
@@ -2232,16 +2260,15 @@ def bm25_topk_batch(
         # cheap rewound clone: fresh() shares the immutable block lists
         # AND the decoded-block cache, so each block is varbyte-decoded
         # at most once per shard per batch instead of once per query.
-        tmpl = _term_cursors(pdf, idfs, avgdl, use_stored)
+        tmpl = _term_cursors(pdf, avgdl, use_stored)
         for qid, terms, k in qspec:
             # Fresh cursor state per query: wand_topk advances it.
             cursors = [tmpl[t].fresh() for t in terms if t in tmpl]
             for d, s in wand_topk(cursors, avgdl, k, deleted=deleted):
-                yield qid, d, s
+                yield qid, d, s, k
 
-    seg = _segment_scan(spark, index, sorted(idfs), _WAND_COLS)
-    per_shard = index.per_shard(spark, seg, fn, _BATCH_SCHEMA)
-    return _merge_batch(spark, per_shard, queries)
+    seg = _segment_scan(spark, index, all_terms, _WAND_COLS)
+    return _merge_batch(index.per_shard(spark, seg, fn, _BATCH_SCHEMA))
 
 
 def bm25_topk_filtered(
@@ -2282,10 +2309,7 @@ def bm25_topk_filtered(
     Both shapes are verified identical on broad predicates in
     tests/test_phrase.py::test_bm25_filtered_mode_equivalence.
     """
-    idfs = _collect_idfs(spark, index, terms)
-    if not idfs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
     # Null predicate results never match (SQL filter semantics): the
     # bitset side drops them, so the complement side must include them.
     match_flag = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
@@ -2317,7 +2341,7 @@ def bm25_topk_filtered(
 
     def fn(pdf: pd.DataFrame, ids_pdf: pd.DataFrame):
         ids = frozenset(int(x) for x in ids_pdf["doc_id"])
-        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        cursors = _term_cursors(pdf, avgdl, use_stored)
         return wand_topk(list(cursors.values()), avgdl, k, **{id_kw: ids})
 
     return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA, side), k)
@@ -2398,10 +2422,7 @@ def _wand_mult_frame_topk(
     (doc_id, m) frame cogroups per shard like the filter bitset; docs
     absent from it (tombstones — docs() drops them) are ineligible, so
     the deletes cogroup is subsumed."""
-    idfs = _collect_idfs(spark, index, terms)
-    if not idfs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
     side = index.docs(spark).select(
         index._shard_col(), "doc_id", m_col.alias("m")
     )
@@ -2413,7 +2434,7 @@ def _wand_mult_frame_topk(
             int(d): float(m)
             for d, m in zip(m_pdf["doc_id"], m_pdf["m"])
         }
-        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        cursors = _term_cursors(pdf, avgdl, use_stored)
         return wand_topk(
             list(cursors.values()), avgdl, k, mult=mult, mult_bound=bound
         )
@@ -2438,15 +2459,12 @@ def bm25_topk_random_score_wand(
     stored bounds are already admissible (mult_bound=1). Tombstones
     still need the deletes path since a callable can't encode absence —
     the standard cogroup handles that."""
-    idfs = _collect_idfs(spark, index, terms)
-    if not idfs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
     avgdl = index.avgdl
     use_stored = not index.multi_gen
     s_int = int(seed)
 
     def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        cursors = _term_cursors(pdf, avgdl, use_stored)
         return wand_topk(
             list(cursors.values()),
             avgdl,
@@ -2456,7 +2474,7 @@ def bm25_topk_random_score_wand(
             mult_bound=1.0,
         )
 
-    seg = _segment_scan(spark, index, idfs, _WAND_COLS)
+    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
     return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
 
 
@@ -2499,10 +2517,8 @@ def bm25_topk_must_not(
     complement mode, which bounds memory by the smaller side.
     """
     excl_set = frozenset(exclude_terms)
-    idfs = _collect_idfs(
-        spark, index, [t for t in terms if t not in excl_set]
-    )
-    if not idfs:
+    scoring = sorted(set(terms) - excl_set)
+    if not scoring:
         return spark.createDataFrame([], TOPK_SCHEMA)
     avgdl = index.avgdl
     use_stored = not index.multi_gen
@@ -2511,13 +2527,15 @@ def bm25_topk_must_not(
         excluded = deleted | _doc_ids_from_group(
             pdf[pdf["term"].isin(excl_set)]
         )
-        cursors = _term_cursors(pdf, idfs, avgdl, use_stored)
+        cursors = _term_cursors(
+            pdf[pdf["term"].isin(scoring)], avgdl, use_stored
+        )
         return wand_topk(
             list(cursors.values()), avgdl, k, deleted=excluded,
             min_match=min_match,
         )
 
-    seg = _segment_scan(spark, index, sorted(set(idfs) | excl_set), _WAND_COLS)
+    seg = _segment_scan(spark, index, sorted(set(scoring) | excl_set), _WAND_COLS)
     return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
 
 
@@ -2637,10 +2655,7 @@ def bm25_topk_paged(
     The slice happens on RAW scores (same total order the unpaged query
     sorts by), so page boundaries agree with the oracle's OFFSET slice
     even when two adjacent docs round to the same 6-dp score."""
-    idfs = _collect_idfs(spark, index, terms)
-    if not idfs:
-        return spark.createDataFrame([], "rank long, doc_id long, score double")
-    per_shard = _per_shard_wand(spark, index, idfs, offset + k)
+    per_shard = _per_shard_wand(spark, index, terms, offset + k)
     # Global window over <= n_shards*(offset+k) candidate rows — the
     # coordinator-merge analog (single tiny partition by construction).
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -2673,11 +2688,8 @@ def bm25_topk_multi_index(
     except the final candidate frame."""
     parts = []
     for i, (h, boost) in enumerate(indexes):
-        idfs = _collect_idfs(spark, h, terms)
-        if not idfs:
-            continue
         parts.append(
-            _per_shard_wand(spark, h, idfs, k).select(
+            _per_shard_wand(spark, h, terms, k).select(
                 F.lit(i).alias("index_id"),
                 "doc_id",
                 (F.col("score") * F.lit(float(boost))).alias("score"),
@@ -2709,11 +2721,8 @@ def bm25_cursor_at(
     the hit's ``sort`` array for the same reason); rounding it would
     mis-split ties at the page boundary. None if fewer than ``rank``
     docs match."""
-    idfs = _collect_idfs(spark, index, terms)
-    if not idfs:
-        return None
     rows = (
-        _per_shard_wand(spark, index, idfs, rank)
+        _per_shard_wand(spark, index, terms, rank)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(rank)
         .collect()
@@ -2741,10 +2750,7 @@ def bm25_topk_search_after(
     The cursor rides into the kernel as an eligibility predicate
     (evaluate-then-discard, like Lucene's paging collector); bounds and
     block skipping are identical to the plain query."""
-    idfs = _collect_idfs(spark, index, terms)
-    if not idfs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    return _merge_topk(_per_shard_wand(spark, index, idfs, k, after=after), k)
+    return _merge_topk(_per_shard_wand(spark, index, terms, k, after=after), k)
 
 
 def expand_wildcard(
@@ -2826,8 +2832,7 @@ def more_like_this(
     terms = [t for t, _ in ranked[:max_query_terms]]
     if not terms:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    qidfs = {t: idfs[t] for t in terms}
-    per_shard = _per_shard_wand(spark, index, qidfs, k + 1)
+    per_shard = _per_shard_wand(spark, index, terms, k + 1)
     return _merge_topk(
         per_shard.orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k + 1)
@@ -2843,7 +2848,7 @@ def more_like_this(
 # never needed (no score pruning — phrase match is a filter), but
 # max_doc_id + n_docs drive the block-skipping intersection.
 _PHRASE_COLS = [
-    "gen", "shard", "term", "block_id", "n_docs", "max_doc_id",
+    "gen", "shard", "term", "idf", "block_id", "n_docs", "max_doc_id",
     "doc_gaps", "tfs", "dls", "positions",
 ]
 
@@ -2868,20 +2873,36 @@ def _require_positions(index: IndexHandle, op: str) -> None:
         )
 
 
+def _shard_posts(pdf: pd.DataFrame) -> dict[str, PosTermPostings]:
+    """A shard's per-term :class:`PosTermPostings`."""
+    return {
+        str(t): _pos_postings_from_group(g, str(t))
+        for t, g in pdf.groupby("term", sort=True)
+    }
+
+
 def _positional_topk(
-    spark: SparkSession, index: IndexHandle, scan_terms, k: int, match
+    spark: SparkSession,
+    index: IndexHandle,
+    scan_terms,
+    k: int,
+    match,
+    need=(),
 ) -> DataFrame:
     """Shared plan of the positional family: pushed ``term IN`` scan of
-    ``scan_terms``, per shard ``match(posts, deleted)`` over the shard's
-    per-term :class:`PosTermPostings` (block skipping, lazy position
-    decode), n_shards*k candidate rows to the global merge."""
+    ``scan_terms``, per shard ``match(posts, idfs, deleted)`` over the
+    shard's per-term :class:`PosTermPostings` (block skipping, lazy
+    position decode) and the idfs of its rows, n_shards*k candidate rows
+    to the global merge. A shard where some term of ``need`` is absent
+    (no rows, or a null idf) yields no rows: docs are sharded, so no doc
+    there holds every needed term."""
+    need = sorted(set(need))
 
     def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
-        return match(posts, deleted)
+        idfs = _shard_idfs(pdf)
+        if any(t not in idfs for t in need):
+            return ()
+        return match(_shard_posts(pdf), idfs, deleted)
 
     seg = _segment_scan(spark, index, scan_terms, _PHRASE_COLS)
     return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
@@ -2921,15 +2942,13 @@ def phrase_topk(
     if not phrase:
         return spark.createDataFrame([], TOPK_SCHEMA)
     uniq = sorted(set(phrase))
-    idfs = _collect_idfs(spark, index, uniq)
-    if any(t not in idfs for t in uniq):
-        return spark.createDataFrame([], TOPK_SCHEMA)  # phrase can't match
     avgdl = index.avgdl
     return _positional_topk(
         spark, index, uniq, k,
-        lambda posts, deleted: phrase_match_topk(
+        lambda posts, idfs, deleted: phrase_match_topk(
             posts, phrase, idfs, avgdl, k, slop=slop, deleted=deleted
         ),
+        need=uniq,
     )
 
 
@@ -2955,15 +2974,13 @@ def span_near_topk(
     uniq = sorted(set(terms))
     if not uniq:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    idfs = _collect_idfs(spark, index, uniq)
-    if any(t not in idfs for t in uniq):
-        return spark.createDataFrame([], TOPK_SCHEMA)
     avgdl = index.avgdl  # plain float in the closure, never the handle
     return _positional_topk(
         spark, index, uniq, k,
-        lambda posts, deleted: span_near_match_topk(
+        lambda posts, idfs, deleted: span_near_match_topk(
             posts, uniq, idfs, avgdl, k, slop=slop, deleted=deleted
         ),
+        need=uniq,
     )
 
 
@@ -2984,15 +3001,13 @@ def span_first_topk(
     with lazy position decode, k survivors per shard reach the global
     merge; tombstones cogrouped exactly like the phrase family."""
     _require_positions(index, "span_first_topk")
-    idfs = _collect_idfs(spark, index, [term])
-    if term not in idfs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    idf, avgdl = idfs[term], index.avgdl
+    avgdl = index.avgdl
     return _positional_topk(
         spark, index, [term], k,
-        lambda posts, deleted: span_first_match_topk(
-            posts, term, idf, avgdl, k, end, deleted=deleted
+        lambda posts, idfs, deleted: span_first_match_topk(
+            posts, term, idfs[term], avgdl, k, end, deleted=deleted
         ),
+        need=[term],
     )
 
 
@@ -3015,16 +3030,14 @@ def span_not_topk(
     skipping and lazy position decode; tombstones cogrouped like the
     rest of the span family."""
     _require_positions(index, "span_not_topk")
-    idfs = _collect_idfs(spark, index, [include])
-    if include not in idfs:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    idf, avgdl = idfs[include], index.avgdl
+    avgdl = index.avgdl
     return _positional_topk(
         spark, index, [include, exclude], k,
-        lambda posts, deleted: span_not_match_topk(
-            posts, include, exclude, idf, avgdl, k, dist=dist,
+        lambda posts, idfs, deleted: span_not_match_topk(
+            posts, include, exclude, idfs[include], avgdl, k, dist=dist,
             deleted=deleted,
         ),
+        need=[include],
     )
 
 
@@ -3052,10 +3065,8 @@ def phrase_topk_batch(
         return spark.createDataFrame(
             [], "query_id int, rank int, doc_id long, score double"
         )
-    idfs = _collect_idfs(spark, index, all_terms)
-    # An empty phrase matches nothing (phrase_topk parity), nor does one
-    # with a term absent from the index — drop both here rather than
-    # letting the kernel see them.
+    # An empty phrase matches nothing (phrase_topk parity); drop it here
+    # rather than letting the kernel see it.
     qspec = [
         (
             int(q["query_id"]),
@@ -3064,24 +3075,24 @@ def phrase_topk_batch(
             int(q.get("slop", 0)),
         )
         for q in queries
-        if q["phrase"] and all(t in idfs for t in q["phrase"])
+        if q["phrase"]
     ]
     avgdl = index.avgdl
 
     def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        posts = {
-            str(t): _pos_postings_from_group(g, str(t))
-            for t, g in pdf.groupby("term", sort=True)
-        }
+        idfs = _shard_idfs(pdf)
+        posts = _shard_posts(pdf)
         for qid, phrase, k, slop in qspec:
+            # a term absent from the shard: no doc here holds the phrase
+            if any(t not in idfs for t in phrase):
+                continue
             for d, s in phrase_match_topk(
                 posts, phrase, idfs, avgdl, k, slop=slop, deleted=deleted
             ):
-                yield qid, d, s
+                yield qid, d, s, k
 
-    seg = _segment_scan(spark, index, sorted(idfs), _PHRASE_COLS)
-    per_shard = index.per_shard(spark, seg, fn, _BATCH_SCHEMA)
-    return _merge_batch(spark, per_shard, queries)
+    seg = _segment_scan(spark, index, all_terms, _PHRASE_COLS)
+    return _merge_batch(index.per_shard(spark, seg, fn, _BATCH_SCHEMA))
 
 
 # --------------------------------------------------------------------------
@@ -3470,7 +3481,7 @@ def span_near_or_topk(
     avgdl = index.avgdl
     return _positional_topk(
         spark, index, members, k,
-        lambda posts, deleted: span_near_or_match_topk(
+        lambda posts, _idfs, deleted: span_near_or_match_topk(
             posts, gs, gidfs, avgdl, k, slop=slop, deleted=deleted
         ),
     )
@@ -3554,15 +3565,13 @@ def intervals_ordered_topk(
     if not q:
         return spark.createDataFrame([], TOPK_SCHEMA)
     uniq = sorted(set(q))
-    idfs = _collect_idfs(spark, index, uniq)
-    if any(t not in idfs for t in uniq):
-        return spark.createDataFrame([], TOPK_SCHEMA)
     avgdl = index.avgdl  # plain float in the closure, never the handle
     return _positional_topk(
         spark, index, uniq, k,
-        lambda posts, deleted: intervals_ordered_match_topk(
+        lambda posts, idfs, deleted: intervals_ordered_match_topk(
             posts, q, idfs, avgdl, k, max_gaps=max_gaps, deleted=deleted
         ),
+        need=uniq,
     )
 
 
@@ -3615,7 +3624,7 @@ def match_phrase_prefix_topk(
     avgdl = index.avgdl
     return _positional_topk(
         spark, index, uniq + group, k,
-        lambda posts, deleted: phrase_prefix_match_topk(
+        lambda posts, _idfs, deleted: phrase_prefix_match_topk(
             posts, fx, group, idfs, group_idf, avgdl, k,
             slop=slop, deleted=deleted,
         ),
@@ -3860,13 +3869,10 @@ def span_containing_topk(
     uniq_big = sorted(set(big_terms))
     need = sorted(set(uniq_big + [little]))
     score_over = uniq_big if mode == "containing" else [little]
-    idfs = _collect_idfs(spark, index, need)
-    if any(t not in idfs for t in need):
-        return spark.createDataFrame([], TOPK_SCHEMA)
     avgdl = index.avgdl
     return _positional_topk(
         spark, index, need, k,
-        lambda posts, deleted: span_containing_match_topk(
+        lambda posts, idfs, deleted: span_containing_match_topk(
             posts,
             uniq_big,
             little,
@@ -3877,6 +3883,7 @@ def span_containing_topk(
             score_terms=score_over,
             deleted=deleted,
         ),
+        need=need,
     )
 
 
@@ -4289,7 +4296,9 @@ def prf_expansion(
     )
     tok = tokenized_docs(docs_df)
     post = exact_postings(tok)
-    stats = corpus_stats(tok)
+    # n_docs rides the query job as a broadcast 1-row aggregate, cast to
+    # the double the driver-side literal would have been.
+    n_row = tok.agg(F.count(F.lit(1)).cast("double").alias("_n_docs"))
     tstats = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     fbp = (
         post.join(F.broadcast(fb), "doc_id")
@@ -4308,9 +4317,10 @@ def prf_expansion(
         ).alias("s"),
         F.count(F.lit(1)).alias("n_fb_docs"),
     )
-    idf = idf_col(stats["n_docs"])
+    idf = idf_col(F.col("_n_docs"))
     return (
         per.join(tstats, "term")
+        .crossJoin(F.broadcast(n_row))
         .select(
             "term",
             F.round(idf * F.col("s"), 6).alias("weight"),

@@ -3751,7 +3751,6 @@ def quantize_fidelity(
     scored = (
         _bm25_frame(t["documents"], terms)
         .scored.select("doc_id", _bm25_weight().alias("s"))
-        .persist()
     )
     smax = scored.agg(F.max("s").alias("smax"))
     both = (
