@@ -10,8 +10,8 @@ group-by -> bulk upserts into Elasticsearch. Ours:
       -> skew-aware shuffle on (shard, term)           (doc-sharded: a heavy
          term like "the" splits across all shards — the salt IS the doc
          shard, so no single reducer ever sees a full stopword posting list)
-      -> k-way sorted merge of runs into varbyte block-max blocks
-                                                        (applyInPandas)
+      -> k-way sorted merge of runs into varbyte block-max blocks, one
+         streaming pass over (shard, term)-sorted runs  (mapInPandas)
       -> segments + term_stats + docs + stats + lineage (SegmentStore)
 
 Resumable (T1, extractor/init.go:128-151 analog): lineage rows mark done
@@ -28,6 +28,7 @@ from collections import Counter
 from dataclasses import dataclass
 from typing import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -242,7 +243,8 @@ def spimi_runs(
 
 
 # --------------------------------------------------------------------------
-# Stage 2: k-way sorted merge into block-max segments (applyInPandas)
+# Stage 2: k-way sorted merge into block-max segments (one mapInPandas
+# pass over (shard, term)-sorted rows)
 # --------------------------------------------------------------------------
 def encode_segment_rows(
     shard: int,
@@ -289,43 +291,80 @@ def encode_segment_rows(
     return out
 
 
-def _merge_group(
-    pdf: pd.DataFrame,
-    avgdl: float,
-    block_size: int,
-    gen: int = 0,
-    with_positions: bool = False,
-) -> pd.DataFrame:
-    """Merge one (shard, term)'s sorted runs into final encoded blocks."""
-    shard = int(pdf["shard"].iloc[0])
-    term = str(pdf["term"].iloc[0])
-    idf_t = float(pdf["idf"].iloc[0])
-    runs = []
-    pos_col = pdf["positions"] if with_positions else [None] * len(pdf)
-    for gaps, tfs, dls, pos in zip(
-        pdf["doc_gaps"], pdf["tfs"], pdf["dls"], pos_col
-    ):
-        blk = PostingBlock.decode(bytes(gaps), bytes(tfs), bytes(dls))
-        if with_positions:
-            plists = decode_positions(bytes(pos), blk.tfs)
-            runs.append(list(zip(blk.doc_ids, blk.tfs, blk.dls, plists)))
-        else:
-            runs.append(list(zip(blk.doc_ids, blk.tfs, blk.dls)))
-    merged = list(heapq.merge(*runs, key=lambda p: p[0]))  # k-way by doc_id
-    schema = POS_SEGMENT_SCHEMA if with_positions else SEGMENT_SCHEMA
-    out = encode_segment_rows(
-        shard,
-        term,
-        idf_t,
-        [p[0] for p in merged],
-        [p[1] for p in merged],
-        [p[2] for p in merged],
-        avgdl,
-        block_size,
-        gen,
-        pos_lists=[p[3] for p in merged] if with_positions else None,
+GroupBody = Callable[[dict[str, list]], list[dict]]
+
+
+def _term_group_batches(
+    batches: Iterator[pd.DataFrame], body: GroupBody, out_cols: list[str]
+) -> Iterator[pd.DataFrame]:
+    """Walk one partition's (shard, term)-sorted rows group by group.
+
+    ``body`` gets one group as column -> list of values and returns its
+    output rows. A group cut by an Arrow batch boundary is carried, as
+    column slices, until its last row arrives, so a task holds one group
+    plus one batch. Yields one frame per input batch."""
+    carry: list[dict[str, list]] = []  # slices of the open group
+
+    def close() -> list[dict]:
+        g = {c: [v for part in carry for v in part[c]] for c in carry[0]}
+        carry.clear()
+        return body(g)
+
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        cols = {c: pdf[c].tolist() for c in pdf.columns}
+        shard, term = pdf["shard"].to_numpy(), pdf["term"].to_numpy()
+        cuts = np.flatnonzero((shard[1:] != shard[:-1]) | (term[1:] != term[:-1]))
+        bounds = [0, *(cuts + 1).tolist(), n]
+        rows: list[dict] = []
+        if carry and (carry[0]["shard"][0], carry[0]["term"][0]) != (
+            cols["shard"][0], cols["term"][0]
+        ):
+            rows += close()
+        for lo, hi in zip(bounds, bounds[1:]):
+            carry.append({c: v[lo:hi] for c, v in cols.items()})
+            if hi < n:  # the batch's last group may go on in the next one
+                rows += close()
+        if rows:
+            yield pd.DataFrame(rows, columns=out_cols)
+    if carry:
+        yield pd.DataFrame(close(), columns=out_cols)
+
+
+def map_term_groups(
+    df: DataFrame, body: GroupBody, schema: T.StructType, order: tuple[str, ...] = ()
+) -> DataFrame:
+    """Apply ``body`` to every (shard, term) group of ``df`` in one
+    mapInPandas pass over rows hash-partitioned on (shard, term) and
+    sorted on (shard, term, *order): one Python call per Arrow batch, not
+    a pandas frame in and out per group (which cost more than the merge)."""
+    out_cols = [f.name for f in schema.fields]
+    return (
+        df.repartition("shard", "term")
+        .sortWithinPartitions("shard", "term", *order)
+        .mapInPandas(lambda it: _term_group_batches(it, body, out_cols), schema)
     )
-    return pd.DataFrame(out, columns=[f.name for f in schema.fields])
+
+
+def _merged_blocks(
+    g: dict[str, list], avgdl: float, block_size: int, gen: int, with_positions: bool
+) -> list[dict]:
+    """Merge one (shard, term)'s sorted runs into final encoded blocks."""
+    runs = []
+    for i, (gaps, tfs, dls) in enumerate(zip(g["doc_gaps"], g["tfs"], g["dls"])):
+        blk = PostingBlock.decode(bytes(gaps), bytes(tfs), bytes(dls))
+        cols = [blk.doc_ids, blk.tfs, blk.dls]
+        if with_positions:
+            cols.append(decode_positions(bytes(g["positions"][i]), blk.tfs))
+        runs.append(list(zip(*cols)))
+    merged = heapq.merge(*runs, key=lambda p: p[0])  # k-way by doc_id
+    ids, tfs, dls, *pos = map(list, zip(*merged))
+    return encode_segment_rows(
+        g["shard"][0], g["term"][0], g["idf"][0], ids, tfs, dls, avgdl,
+        block_size, gen, pos_lists=pos[0] if with_positions else None,
+    )
 
 
 def merge_runs_to_segments(
@@ -336,25 +375,19 @@ def merge_runs_to_segments(
     gen: int = 0,
     positions: bool = False,
 ) -> DataFrame:
-    """groupBy(shard, term) k-way merge. The (shard, term) key is the
+    """Per-(shard, term) k-way merge. The (shard, term) key is the
     skew-aware shuffle: per-group size is bounded by shard size, never by a
     term's global df — 'the' with df≈N still splits into n_shards groups.
 
-    Partitioning note: encoded runs are a few KB at small corpus sizes,
-    and AQE's DEFAULT minPartitionSize (1m) folded every (shard, term)
-    group into one partition, running the whole Python k-way merge
-    serially (992 groups in 1 task, 4.8 s at sf0.1). The fix lives in
-    session.py (minPartitionSize=16k), NOT in an explicit repartition
-    here: a fixed REPARTITION_BY_NUM pin measured ~20% slower at 8M
-    docs on 4×2-core executors because it overrode AQE's byte-sized
-    task count for the big-corpus merge."""
+    Partitioning note: the repartition carries no partition count, so
+    AQE sizes the merge's tasks by shuffle bytes (a fixed count measured
+    ~20% slower at 8M docs on 4×2-core executors)."""
     enriched = runs.join(term_stats.select("term", "idf"), "term")
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _merge_group(pdf, avgdl, block_size, gen, positions)
-
-    schema = POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA
-    return enriched.groupBy("shard", "term").applyInPandas(fn, schema)
+    return map_term_groups(
+        enriched,
+        lambda g: _merged_blocks(g, avgdl, block_size, gen, positions),
+        POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -387,6 +420,19 @@ class _BgJob:
         self._t.join()
         if self._exc is not None:
             raise self._exc
+
+
+def input_partitions(df: DataFrame) -> int:
+    """Partitions ``df`` is planned with, read without running a job.
+
+    A shuffled source's count is its physical plan's output partitioning
+    (before AQE coalesces it; ``df.rdd`` would run the shuffle's map stage
+    to learn the coalesced count). A plain scan plans 0 there, and its RDD
+    plans its splits without a job."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.outputPartitioning().numPartitions() or df.rdd.getNumPartitions()
 
 
 @dataclass
@@ -468,7 +514,7 @@ def build_index(
     # round-robin repartition). Output is partition-invariant by design
     # (runs k-way-merge to the same postings; W1 pytest).
     sc = spark.sparkContext
-    if source.rdd.getNumPartitions() < sc.defaultParallelism:
+    if input_partitions(source) < sc.defaultParallelism:
         source = source.repartition(sc.defaultParallelism)
     tok = tokenized_docs(source, id_col=id_col, text_col=text_col)
 

@@ -29,7 +29,8 @@ Crash-safety (the SegmentStore commit protocol):
   sees gen-0 blocks scored under stats the manifest doesn't match.
 
 Scale notes: each stage is the same shuffle shape as the base build
-(mapInPandas decode → groupBy(shard, term) applyInPandas re-chunk); the
+(mapInPandas decode → one streaming mapInPandas re-chunk over rows
+hash-partitioned and sorted on (shard, term), build.map_term_groups); the
 tombstones are a DataFrame anti-join / per-shard cogroup — never a
 driver-side collect. Generations are separate parquet partitions
 (``gen=<g>/shard=<s>``) so queries prune by term within every generation
@@ -52,6 +53,7 @@ from unichem2index_spark.operators.build import (
     docs_table,
     encode_segment_rows,
     idf_col,
+    map_term_groups,
     merge_runs_to_segments,
     spimi_runs,
     tokenized_docs,
@@ -293,7 +295,7 @@ DECODED_ROWS_SCHEMA = "shard int, term string, doc_id long, tf long, dl long"
 DECODED_POS_ROWS_SCHEMA = DECODED_ROWS_SCHEMA + ", positions array<int>"
 
 
-def _decode_rows(with_positions: bool = False):
+def _decoded_rows(seg: DataFrame, with_positions: bool) -> DataFrame:
     """Explode encoded segment blocks into (shard, term, doc_id, tf, dl
     [, positions]) rows so tombstone filtering is a plain distributed
     anti-join (positions ride as a per-row int array through Arrow)."""
@@ -328,37 +330,51 @@ def _decode_rows(with_positions: bool = False):
                 out["positions"] = p_o
             yield pd.DataFrame(out)
 
-    return fn
+    cols = ["shard", "term", "doc_gaps", "tfs", "dls"] + (
+        ["positions"] if with_positions else []
+    )
+    return seg.select(*cols).mapInPandas(
+        fn, DECODED_POS_ROWS_SCHEMA if with_positions else DECODED_ROWS_SCHEMA
+    )
 
 
-def _chunk_group(avgdl: float, block_size: int, with_positions: bool = False):
-    """Re-chunk one (shard, term)'s live posting rows into gen-0 blocks."""
-    schema = POS_SEGMENT_SCHEMA if with_positions else SEGMENT_SCHEMA
+def _live_stats(docs: DataFrame) -> tuple[int, int, float]:
+    """(n_docs, total_tokens, avgdl) of a docs frame, in one collect."""
+    row = docs.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("tt")
+    ).collect()[0]
+    n, tt = int(row.n), int(row.tt or 0)
+    return n, tt, (float(tt) / float(n)) if n else 0.0
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        term = str(pdf["term"].iloc[0])
-        idf_t = float(pdf["idf"].iloc[0])
-        pdf = pdf.sort_values("doc_id")
-        out = encode_segment_rows(
-            shard,
-            term,
-            idf_t,
-            [int(x) for x in pdf["doc_id"]],
-            [int(x) for x in pdf["tf"]],
-            [int(x) for x in pdf["dl"]],
-            avgdl,
-            block_size,
-            gen=0,
-            pos_lists=(
-                [[int(p) for p in pl] for pl in pdf["positions"]]
-                if with_positions
-                else None
-            ),
+
+def _term_stats(rows: DataFrame, n_docs: int) -> DataFrame:
+    """term, df, cf, idf over decoded posting rows (one row per posting)."""
+    return (
+        rows.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
+        .withColumn("idf", idf_col(n_docs))
+    )
+
+
+def _rechunk(
+    rows: DataFrame, tstats: DataFrame, avgdl: float, block_size: int, positions: bool
+) -> DataFrame:
+    """Re-chunk live posting rows into gen-0 blocks: one streaming pass
+    over (shard, term, doc_id)-sorted rows, so each group arrives doc-sorted."""
+
+    def body(g: dict[str, list]) -> list[dict]:
+        pos = [[int(p) for p in pl] for pl in g["positions"]] if positions else None
+        return encode_segment_rows(
+            g["shard"][0], g["term"][0], g["idf"][0], g["doc_id"], g["tf"], g["dl"],
+            avgdl, block_size, gen=0, pos_lists=pos,
         )
-        return pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
-    return fn
+    return map_term_groups(
+        rows.join(tstats.select("term", "idf"), "term"),
+        body,
+        POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA,
+        order=("doc_id",),
+    )
 
 
 def compact(spark: SparkSession, index_dir: str) -> dict:
@@ -382,41 +398,17 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     # Live corpus stats from the forward docs table.
     docs = store.read_committed(spark, "docs", gens)
     live_docs = docs.join(dele, "doc_id", "left_anti") if dele is not None else docs
-    live = live_docs.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("tt")
-    ).collect()[0]
-    n_live, total_tokens = int(live.n), int(live.tt or 0)
-    avgdl = (float(total_tokens) / float(n_live)) if n_live else 0.0
+    n_live, total_tokens, avgdl = _live_stats(live_docs)
 
-    seg = store.read_committed(spark, "segments", gens)
-    seg_cols = ["shard", "term", "doc_gaps", "tfs", "dls"] + (
-        ["positions"] if positions else []
-    )
-    rows = seg.select(*seg_cols).mapInPandas(
-        _decode_rows(positions),
-        DECODED_POS_ROWS_SCHEMA if positions else DECODED_ROWS_SCHEMA,
-    )
+    rows = _decoded_rows(store.read_committed(spark, "segments", gens), positions)
     live_rows = rows.join(dele, "doc_id", "left_anti") if dele is not None else rows
 
-    tstats = (
-        live_rows.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-        .withColumn("idf", idf_col(n_live))
-    )
     old = {n: store._resolve(n) for n in ("segments", "term_stats", "docs", "url_map")}
+    tstats = _term_stats(live_rows, n_live)
     ts_phys = store.stage_table(tstats, "term_stats", max_files=8)
     tstats_r = spark.read.parquet(store.path(ts_phys))
 
-    # Tiny-shuffle partition collapse for the re-chunk exchange is
-    # handled by the session's AQE minPartitionSize floor (see
-    # session.py / merge_runs_to_segments) — an explicit pin here
-    # measured slower at executor scale by overriding AQE's byte-sized
-    # task count.
-    enriched = live_rows.join(tstats_r.select("term", "idf"), "term")
-    compacted = enriched.groupBy("shard", "term").applyInPandas(
-        _chunk_group(avgdl, block_size, positions),
-        POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA,
-    )
+    compacted = _rechunk(live_rows, tstats_r, avgdl, block_size, positions)
     # stage_segments returns the name ACTUALLY written: a fresh version
     # path on the parquet backend, the logical table on Iceberg (atomic
     # createOrReplace — which also drops stale gen>=1 partitions). The
@@ -553,8 +545,8 @@ def reindex(
 
     Scale shape: identical to :func:`compact` — one mapInPandas decode,
     one semi-join on the kept doc_ids (broadcast-eligible when the filter
-    is selective), one groupBy(shard, term) re-chunk; per-task state is
-    bounded by (shard, term) group size, never a term's global df. The
+    is selective), one streaming (shard, term) re-chunk; per-task state is
+    one (shard, term) group plus one Arrow batch, never a term's global df. The
     predicate is pushed to the docs-table parquet scan.
     """
     t0 = time.time()
@@ -578,25 +570,14 @@ def reindex(
         docs = docs.where(predicate)
     kept_docs = docs.drop("gen").withColumn("gen", F.lit(0))
 
-    live = kept_docs.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("tt")
-    ).collect()[0]
-    n_live, total_tokens = int(live.n), int(live.tt or 0)
-    avgdl = (float(total_tokens) / float(n_live)) if n_live else 0.0
+    n_live, total_tokens, avgdl = _live_stats(kept_docs)
     if n_live == 0:
         # The parquet store cannot represent a zero-table readable index
         # (schema inference needs rows); surface the no-op explicitly
         # instead of committing a dest that IndexHandle.open would reject.
         raise ValueError("reindex matched 0 live documents; nothing to copy")
 
-    seg = src.read_committed(spark, "segments", gens)
-    seg_cols = ["shard", "term", "doc_gaps", "tfs", "dls"] + (
-        ["positions"] if positions else []
-    )
-    rows = seg.select(*seg_cols).mapInPandas(
-        _decode_rows(positions),
-        DECODED_POS_ROWS_SCHEMA if positions else DECODED_ROWS_SCHEMA,
-    )
+    rows = _decoded_rows(src.read_committed(spark, "segments", gens), positions)
     # One semi-join enforces BOTH the tombstones and the predicate: the
     # kept-docs frame already excludes them.
     rows = rows.join(kept_docs.select("doc_id"), "doc_id", "left_semi")
@@ -605,21 +586,9 @@ def reindex(
             "shard", (F.col("doc_id") % out_shards).cast("int")
         )
 
-    tstats = (
-        rows.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-        .withColumn("idf", idf_col(n_live))
-    )
-    dest.write_table(tstats, "term_stats", max_files=8)
+    dest.write_table(_term_stats(rows, n_live), "term_stats", max_files=8)
     tstats_r = spark.read.parquet(dest.path("term_stats"))
-    # Same partitioning note as compact(): the session's AQE
-    # minPartitionSize floor handles the tiny-shuffle collapse.
-    enriched = rows.join(tstats_r.select("term", "idf"), "term")
-    segments = enriched.groupBy("shard", "term").applyInPandas(
-        _chunk_group(avgdl, block_size, positions),
-        POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA,
-    )
-    dest.write_segments(segments)
+    dest.write_segments(_rechunk(rows, tstats_r, avgdl, block_size, positions))
     dest.write_gen_partition(kept_docs, "docs")
     if src.exists("url_map"):
         um = _live_url_map(spark, src, gens)

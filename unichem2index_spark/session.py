@@ -45,16 +45,18 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's coalescing targets max(totalBytes/parallelism,
-        # minPartitionSize). The 1m default floor folds KB-sized
-        # shuffles into ONE partition — fatal for groupBy+applyInPandas
-        # stages whose encoded rows are tiny but whose per-group Python
-        # kernel cost is invisible to byte stats (the index-build merge
-        # ran 992 groups in 1 task at sf0.1). 16k keeps such stages at
-        # ~cores partitions while leaving large shuffles untouched
-        # (their target is totalBytes/parallelism either way) — the
-        # scale-adaptive fix; a fixed REPARTITION_BY_NUM pin on the
-        # merge measured ~20% SLOWER at 8M docs on 4x2-core executors
-        # by overriding AQE's byte-sized task count.
+        # minPartitionSize). The 1m default floor folds KB-sized shuffles
+        # into ONE partition, so a Python stage whose rows are tiny but
+        # cost much per row runs on one core; 16k keeps such stages at
+        # ~cores partitions and leaves large shuffles alone (their target
+        # is totalBytes/parallelism either way). The build merge, for which
+        # the floor was set, no longer needs it: with one Python call per
+        # Arrow batch (build.map_term_groups) the perfbench merge over
+        # cached runs (seed 1, local[2] on a 4-core host) took 0.42-0.53 s
+        # on 3 tasks at 16k and 0.44-0.48 s on 1 task at 1m (one call per
+        # group: 6.7 s vs 11.5-13.8 s). It stays
+        # for the remaining per-group kernels (groupBy + applyInPandas on
+        # the query path, trainprep's pack), not re-measured.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
