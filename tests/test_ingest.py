@@ -12,11 +12,14 @@ from unichem2index_spark.operators import query as Q
 from unichem2index_spark.operators.ingest import (
     assign_doc_ids,
     build_index_from_webtext,
+    dedup_and_assign_doc_ids,
     dedup_latest_by_url,
     webtext_docs,
 )
 from unichem2index_spark.schemas import WEBTEXT_SCHEMA
 from unichem2index_spark.synth import gen_webtext
+
+from tests.test_query_plumbing import count_jobs
 
 N = 400
 
@@ -47,6 +50,16 @@ def test_doc_ids_dense_rank_any_parallelism(spark, webtext, parts):
     }
     urls = sorted(got)
     assert [got[u] for u in urls] == list(range(len(urls)))
+
+
+def test_doc_id_sample_sizing_runs_no_job(spark):
+    """Building the doc_id frame of a shuffled source runs the fused count
+    + sample collect only; sizing the sample from ``rdd.getNumPartitions()``
+    ran one more job (the repartition's map stage) first."""
+    src = spark.createDataFrame(
+        gen_webtext(60, seed=3), schema=WEBTEXT_SCHEMA
+    ).repartition(4)
+    assert count_jobs(spark, lambda: dedup_and_assign_doc_ids(src)) == 2
 
 
 def test_doc_ids_degenerate_keyspaces(spark):

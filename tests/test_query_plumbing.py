@@ -16,7 +16,7 @@ hot call, and a term that has segment rows but no term_stats row.
 
 from __future__ import annotations
 
-import itertools
+import uuid
 
 import pytest
 
@@ -29,8 +29,6 @@ from unichem2index_spark.synth import gen_webtext
 
 from tests.conftest import SF_SMOKE
 
-_group_ids = itertools.count()
-
 WAND = (["the", "merge"], 10)
 PHRASE = (["merge", "group"], 10)
 BATCH = [
@@ -42,12 +40,16 @@ BATCH = [
 def count_jobs(spark, fn) -> int:
     """Spark jobs started while ``fn`` runs (authoring and collect)."""
     sc = spark.sparkContext
-    group = f"jobcount-{next(_group_ids)}"
+    # unique per call: this module is imported under two names (by pytest
+    # and as tests.test_query_plumbing), so a module counter would repeat
+    group = f"jobcount-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status tracker asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -105,11 +107,17 @@ def hot_calls(spark, index_dir: str):
 
 
 @pytest.fixture(scope="module")
-def hot(spark, tmp_path_factory):
+def hot_index(spark, tmp_path_factory) -> str:
     rows = gen_webtext(200, seed=42)
     base = spark.createDataFrame(rows, schema=WEBTEXT_SCHEMA).repartition(4)
     out = str(tmp_path_factory.mktemp("jobs_index"))
     build_index_from_webtext(spark, base, out, n_shards=4, positions=True)
+    return out
+
+
+@pytest.fixture(scope="module")
+def hot(spark, hot_index):
+    out = hot_index
     fresh = hot_calls(spark, out)
     res = delete_by_query(spark, out, "doclen >= 60", build_id="t-jobs")
     assert res.n_replaced > 0
@@ -130,6 +138,22 @@ def test_hot_call_job_counts(hot, state, expected):
 @pytest.mark.parametrize("state", ["fresh", "tombstoned"])
 def test_hot_call_plan_has_no_exchange_below_the_shard_kernel(hot, state):
     assert hot[state][1] == {"wand": [], "phrase": []}
+
+
+def test_cached_handle_builds_each_projection_once(spark, hot_index):
+    h = Q.IndexHandle.open(spark, hot_index, cache=True)
+    try:
+        wand = h.cached_projection(Q._WAND_COLS)
+        assert h.cached_projection(list(Q._WAND_COLS)) is wand
+        phrase = h.cached_projection(Q._PHRASE_COLS)
+        assert phrase is not wand and phrase.columns == Q._PHRASE_COLS
+        Q.bm25_topk_wand(spark, h, *WAND).collect()
+        Q.phrase_topk(spark, h, *PHRASE).collect()
+        assert h.cached_projection(Q._WAND_COLS) is wand
+        assert h.cached_projection(Q._PHRASE_COLS) is phrase
+    finally:
+        h.close()
+    assert h._projections == {}
 
 
 def _hits(df) -> list[tuple[int, float]]:

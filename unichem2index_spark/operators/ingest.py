@@ -43,7 +43,11 @@ from pyspark.sql import Window as W
 from pyspark.sql.functions import pandas_udf
 
 from unichem2index_spark.functions.extract import extract_text_udf
-from unichem2index_spark.operators.build import BuildResult, build_index
+from unichem2index_spark.operators.build import (
+    BuildResult,
+    build_index,
+    input_partitions,
+)
 from unichem2index_spark.sources.tables import SegmentStore
 
 
@@ -150,10 +154,7 @@ def dedup_and_assign_doc_ids(
     # -- 1. fused count + boundary sample (one pruned job) ----------------
     keys_only = df.select(F.coalesce(F.col(key), F.lit("")).alias(key))
     # per-partition sample cap: aim for ~50 keys per bucket overall
-    try:
-        n_input_parts = max(1, keys_only.rdd.getNumPartitions())
-    except Exception:
-        n_input_parts = max(1, spark.sparkContext.defaultParallelism)
+    n_input_parts = max(1, input_partitions(keys_only))
     cap = max(64, (50 * n_buckets) // n_input_parts)
 
     def count_and_sample(batches):

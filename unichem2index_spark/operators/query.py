@@ -18,7 +18,7 @@ Scale notes
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -1785,6 +1785,7 @@ class IndexHandle:
     has_positions: bool = False
     _segments_cached: DataFrame | None = None
     _deletes_cached: DataFrame | None = None
+    _projections: dict[tuple[str, ...], DataFrame] = field(default_factory=dict)
 
     @staticmethod
     def open(
@@ -1801,7 +1802,9 @@ class IndexHandle:
         hot call is then one exchange-free Spark job, with no parquet
         scan, idf lookup or tombstone read of its own. The cached idf and
         tombstones are those of open time too; an uncached handle reads
-        term_stats anew on each call. Call :meth:`close` to release."""
+        term_stats anew on each call. Each kernel's column projection of
+        the cached rows is built once (:meth:`cached_projection`). Call
+        :meth:`close` to release."""
         store = SegmentStore(index_dir)
         mf = store.read_manifest()
         h = IndexHandle(
@@ -1837,6 +1840,7 @@ class IndexHandle:
             if df is not None:
                 df.unpersist()
         self._segments_cached = self._deletes_cached = None
+        self._projections.clear()
 
     @property
     def multi_gen(self) -> bool:
@@ -1880,6 +1884,17 @@ class IndexHandle:
             .join(idf, "term", "left")
             .repartition(self._shard_partitions(spark), "shard")
         )
+
+    def cached_projection(self, cols: list[str]) -> DataFrame:
+        """The cached segment rows pruned to ``cols``, one DataFrame per
+        column list for the handle's life: a hot call filters it by term
+        instead of building and analysing a fresh projection. Same
+        physical plan as ``segments().where(...).select(*cols)``."""
+        key = tuple(cols)
+        proj = self._projections.get(key)
+        if proj is None:
+            proj = self._projections[key] = self._segments_cached.select(*cols)
+        return proj
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
         return self.store.read(spark, "term_stats")
@@ -1991,10 +2006,11 @@ def _segment_scan(
     spark: SparkSession, index: IndexHandle, terms, cols: list[str]
 ) -> DataFrame:
     """The query terms' segment rows (with their ``idf``), pruned to the
-    kernel's columns."""
-    return index.segments(spark).where(F.col("term").isin(list(terms))).select(
-        *cols
-    )
+    kernel's columns; a cached handle's projection is built once."""
+    in_terms = F.col("term").isin(list(terms))
+    if index._segments_cached is not None:
+        return index.cached_projection(cols).where(in_terms)
+    return index.segments(spark).where(in_terms).select(*cols)
 
 
 def _collect_idfs(

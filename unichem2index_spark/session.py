@@ -1,12 +1,16 @@
 """SparkSession factory with the settings this engine assumes.
 
 Local-mode testing stand-in for a multi-executor cluster; every knob here is
-also correct on a real cluster (AQE, Arrow, sane shuffle partitioning).
+also correct on a real cluster (AQE, Arrow, sane shuffle partitioning, and
+Unix domain sockets to the Python workers: an executor and its workers share
+a host).
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -14,16 +18,49 @@ import unichem2index_spark
 
 WORKER_MODULE = "pyspark_u2i_worker"
 
+# Linux caps an AF_UNIX path at 107 bytes (sun_path is 108 with the NUL),
+# and Spark names each socket "<dir>/.<uuid4>.sock": the directory plus 43.
+MAX_SOCKET_PATH = 107
+SOCKET_NAME_BYTES = 43
+
+
+def _package_root(package_file: str) -> str:
+    return os.path.dirname(os.path.dirname(os.path.abspath(package_file)))
+
 
 def worker_module_for(package_file: str) -> str | None:
     """The ``spark.python.worker.module`` to use when this package was
     imported from ``package_file``: the module beside the package directory,
     or None (Spark's default worker) when there is none, e.g. when the
     package came from a ``--py-files`` zip."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(package_file)))
-    if os.path.isfile(os.path.join(root, WORKER_MODULE + ".py")):
+    if os.path.isfile(os.path.join(_package_root(package_file), WORKER_MODULE + ".py")):
         return WORKER_MODULE
     return None
+
+
+def unix_socket_dir(tmp: str) -> str:
+    """The directory for the Python workers' Unix domain sockets: ``tmp``
+    when its socket paths fit in 107 bytes, else ``/tmp/u2i-<uid>``."""
+    if len(os.fsencode(tmp)) + SOCKET_NAME_BYTES <= MAX_SOCKET_PATH:
+        return tmp
+    return f"/tmp/u2i-{os.getuid()}"
+
+
+def _private_dir(path: str) -> None:
+    """Make ``path`` a directory only this user can enter (mode 0700), or
+    fail if it exists and is not: a socket in it accepts any process that
+    can reach it, and Spark authenticates Unix domain sockets by path alone."""
+    os.makedirs(path, mode=0o700, exist_ok=True)
+    st = os.lstat(path)
+    if (
+        not stat.S_ISDIR(st.st_mode)
+        or st.st_uid != os.getuid()
+        or st.st_mode & 0o077
+    ):
+        raise PermissionError(
+            f"{path} must be a directory owned by uid {os.getuid()} with "
+            "mode 0700 to hold the Python workers' sockets"
+        )
 
 
 def get_spark(
@@ -78,13 +115,44 @@ def get_spark(
     # cores, local[2], over a cached 2-partition frame: task launch -> UDF
     # start of a no-op mapInPandas went from 241-335 to 20-24 ms, and the
     # whole call from 321-495 to 163-185 ms (p50s of three runs each).
-    # The Python daemon imports the module from the same base path its
-    # workers import this package from, so it is set only when the module
-    # sits beside the package directory; packages shipped with --py-files
-    # keep the default.
+    # It is set only when the module sits beside the package directory
+    # (packages shipped with --py-files keep the default), and then that
+    # directory goes on the workers' PYTHONPATH, which Spark merges with the
+    # environment's: the Python daemon imports the module from its own path,
+    # so a driver started from another working directory without PYTHONPATH
+    # failed every Python task with ModuleNotFoundError.
     worker_module = worker_module_for(unichem2index_spark.__file__)
     if worker_module:
-        builder = builder.config("spark.python.worker.module", worker_module)
+        builder = builder.config("spark.python.worker.module", worker_module).config(
+            "spark.executorEnv.PYTHONPATH", _package_root(unichem2index_spark.__file__)
+        )
+    # Each Python task talks to its worker over a socket. Over loopback TCP a
+    # worker waited a steady ~43 ms for its first Arrow batch while the UDF
+    # itself took ~0.1 ms (a delayed-ACK stall is the guess, not verified);
+    # a Unix domain socket cuts the Python round trip and leaves the JVM
+    # alone. No-op groupBy("shard").applyInPandas over a cached 2-partition
+    # frame, p50 of 30 warm calls, local[2] on a shared 4-core host (load
+    # 1.6-3.6):
+    #
+    #   session                          TCP          Unix socket
+    #   perfbench's isolate()            160 ms       122 ms
+    #   plain, 4 runs per side           118-128 ms   83-100 ms
+    #   JVM-only collect() of the frame  29-32 ms     32-34 ms
+    #
+    # A socket path must fit in 107 bytes; Spark's default directory is
+    # java.io.tmpdir, where a 76-character directory failed session start
+    # with "AF_UNIX path too long". unix_socket_dir keeps the temp directory
+    # when it fits and otherwise uses a short private one, so a long TMPDIR
+    # never silently puts the session back on TCP. The directory is set for
+    # local masters only, whose workers run on this host; a cluster's
+    # executors use their own java.io.tmpdir, which exists on their host.
+    builder = builder.config("spark.python.unix.domain.socket.enabled", "true")
+    if master.startswith("local"):
+        tmp = tempfile.gettempdir()
+        sock_dir = unix_socket_dir(tmp)
+        if sock_dir != tmp:
+            _private_dir(sock_dir)
+        builder = builder.config("spark.python.unix.domain.socket.dir", sock_dir)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
