@@ -1,34 +1,33 @@
-"""Positional phrase matching with block skipping (pure kernel; runs
+"""Positional query kernels with block skipping (pure Python; each runs
 per doc-shard inside ``applyInPandas``).
 
-Lucene's ExactPhraseMatcher analog over our varbyte block layout (the
-phrase machinery the reference's ES index carries but never exercises —
-extractor/loader.go:121 creates it, loader.go:239-379 never issues a
-match_phrase). Strategy:
+As in Lucene, where every positional query runs on one conjunction and
+adds only its position check, each ``*_match_topk`` kernel here is its
+position predicate between two shared helpers:
 
-* The candidate doc set is driven by the RAREST phrase term (shard-local
-  df), decoded in full — it is the intersection's upper bound.
-* Every other term is probed candidate-by-candidate through its per-block
-  ``max_doc_id`` metadata (monotone bisect, lo-anchored => galloping):
-  only blocks that can contain a candidate are decoded.
-* The positions blob is decoded ONLY for blocks holding a doc that
-  survived the doc-id intersection.
+* :func:`_intersect` — rarest-group-first doc-id intersection. A group
+  is a list of member terms whose postings are unioned (a ``span_or``
+  clause, a prefix expansion); a plain term is a one-member group. The
+  rarest group (summed shard-local df) is decoded in full — it bounds
+  the intersection; every other member is probed candidate-by-candidate
+  through its per-block ``max_doc_id`` (monotone bisect, lo-anchored =>
+  galloping), so only blocks that can hold a candidate are decoded.
+* :func:`_bag_topk` — scores the accepted candidates as a BM25 bag over
+  ordered ``(members, idf)`` slots, tf summed over the members present,
+  and cuts the top k by (score desc, doc_id asc).
 
-A phrase containing a stopword-class term therefore decodes
-O(|candidates|) of that term's postings — never its full per-shard df.
-(The earlier design materialized every phrase term's postings AND
-positions per shard into dicts before intersecting: per-task memory
-O(sum df_shard(term) * positions), exactly what a "the quick" phrase
-must not cost.)
-
-``DecodeStats`` counts decoded postings/positions so tests can assert
-the skipping actually happens.
+Predicates decode positions lazily, only for blocks holding a surviving
+candidate, so a stopword in a query costs O(|candidates|) of its
+postings, never its per-shard df. ``DecodeStats`` counts decoded
+postings/positions so tests can assert the skipping happens.
 """
 
 from __future__ import annotations
 
 from bisect import bisect_left
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
+from itertools import product
 
 from unichem2index_spark.functions.bm25 import score_term
 from unichem2index_spark.functions.codec import PostingBlock, decode_positions
@@ -119,6 +118,88 @@ class PosTermPostings:
         return plists[bisect_left(blk.doc_ids, doc_id)]
 
 
+_TfDl = dict[str, dict[int, tuple[int, int]]]
+
+
+def _intersect(
+    posts: dict[str, PosTermPostings],
+    groups: list[list[str]],
+    deleted: frozenset[int],
+) -> tuple[list[int], _TfDl]:
+    """Ascending live doc ids holding some member of EVERY group, and
+    each member's ``doc -> (tf, dl)`` (complete for those docs). Groups
+    are taken rarest first — summed member df, ties by group order —
+    and every member must be in ``posts``."""
+    order = sorted(
+        range(len(groups)),
+        key=lambda i: (sum(posts[t].df for t in groups[i]), i),
+    )
+    tfdl: _TfDl = {t: posts[t].all_docs() for t in groups[order[0]]}
+    cand = sorted({d for m in tfdl.values() for d in m if d not in deleted})
+    for gi in order[1:]:
+        if not cand:
+            break
+        found: set[int] = set()
+        for t in groups[gi]:
+            tfdl[t] = posts[t].lookup_many(cand)
+            found.update(tfdl[t])
+        cand = [d for d in cand if d in found]
+    return cand, tfdl
+
+
+def _bag_topk(
+    docs: Iterable[int], tfdl: _TfDl, slots: list[tuple[list[str], float]],
+    avgdl: float, k: int,
+) -> list[tuple[int, float]]:
+    """Top-k (doc_id, score) of ``docs`` by (score desc, doc_id asc),
+    each doc scored as a BM25 bag over ``slots``: per slot, tf summed
+    over the members present in the doc, weighted by the slot's idf.
+    Slots are summed in the given order (float addition is not
+    associative)."""
+    out: list[tuple[int, float]] = []
+    for doc in docs:
+        dl = next(m[doc][1] for m in tfdl.values() if doc in m)
+        score = 0.0
+        for members, idf in slots:
+            tf = sum(tfdl[t][doc][0] for t in members if doc in tfdl[t])
+            score += score_term(tf, dl, avgdl, idf)
+        out.append((doc, score))
+    out.sort(key=lambda p: (-p[1], p[0]))
+    return out[:k]
+
+
+def _slot(
+    posts: dict[str, PosTermPostings], tfdl: _TfDl, members: list[str]
+) -> Callable[[int], list[int]]:
+    """doc -> ascending positions of the union of the members'
+    occurrences (Lucene's SpanOr / MultiPhraseQuery slot disjunction),
+    for candidates of the members' group; a one-member slot is the
+    term's own lookup, with no wrapper call per doc."""
+    if len(members) == 1:
+        return posts[members[0]].positions_of
+    return lambda doc: sorted(
+        {p for t in members if doc in tfdl[t] for p in posts[t].positions_of(doc)}
+    )
+
+
+def _phrase_run(
+    slots: list[Callable[[int], list[int]]], doc: int, slop: int
+) -> bool:
+    """Whether ``doc`` holds the slots in order, each adjacent pair at
+    most ``slop`` extra tokens apart. Stops decoding at the first slot
+    the chain cannot reach."""
+    live = set(slots[0](doc))
+    for positions in slots[1:]:
+        live = {
+            q
+            for q in positions(doc)
+            if any(q - d in live for d in range(1, slop + 2))
+        }
+        if not live:
+            return False
+    return bool(live)
+
+
 def phrase_match_topk(
     posts: dict[str, PosTermPostings],
     phrase: list[str],
@@ -146,40 +227,12 @@ def phrase_match_topk(
     uniq = sorted(set(phrase))
     if any(t not in posts for t in uniq):
         return []
-    # 1. doc-id intersection, rarest term first (it bounds everything)
-    by_rarity = sorted(uniq, key=lambda t: (posts[t].df, t))
-    rare = by_rarity[0]
-    tfdl: dict[str, dict[int, tuple[int, int]]] = {rare: posts[rare].all_docs()}
-    cand = sorted(d for d in tfdl[rare] if d not in deleted)
-    for t in by_rarity[1:]:
-        if not cand:
-            return []
-        tfdl[t] = posts[t].lookup_many(cand)
-        cand = [d for d in cand if d in tfdl[t]]
-    # 2. positional verification, lazy per surviving candidate
-    out: list[tuple[int, float]] = []
-    for doc in cand:
-        live = set(posts[phrase[0]].positions_of(doc))
-        ok = bool(live)
-        for t in phrase[1:]:
-            nxt = {
-                q
-                for q in posts[t].positions_of(doc)
-                if any(q - d in live for d in range(1, slop + 2))
-            }
-            live = nxt
-            if not live:
-                ok = False
-                break
-        if not ok:
-            continue
-        dl = tfdl[rare][doc][1]
-        score = sum(
-            score_term(tfdl[t][doc][0], dl, avgdl, idfs[t]) for t in uniq
-        )
-        out.append((doc, score))
-    out.sort(key=lambda p: (-p[1], p[0]))
-    return out[:k]
+    cand, tfdl = _intersect(posts, [[t] for t in uniq], deleted)
+    chain = [posts[t].positions_of for t in phrase]
+    return _bag_topk(
+        (d for d in cand if _phrase_run(chain, d, slop)),
+        tfdl, [([t], idfs[t]) for t in uniq], avgdl, k,
+    )
 
 
 def min_span(plists: list[list[int]]) -> int:
@@ -218,36 +271,17 @@ def span_near_match_topk(
     reduces to ``max_pos - min_pos <= slop + n - 1``; that window is
     checked against the exact minimal span from :func:`min_span`.
 
-    Same two-stage scale shape as the phrase kernel (shared machinery):
-    doc-id intersection rarest-first with block skipping, positions
-    decoded lazily only for survivors. Matching docs score as a plain
-    BM25 bag over the unique terms (same discipline as phrase_match_topk,
-    so the SQL oracle formulation agrees exactly)."""
+    It is :func:`span_near_or_match_topk` with one-member groups.
+    Matching docs score as a plain BM25 bag over the unique terms (same
+    discipline as phrase_match_topk, so the SQL oracle formulation
+    agrees exactly)."""
     uniq = sorted(set(terms))
     if not uniq or any(t not in posts for t in uniq):
         return []
-    window = slop + len(uniq) - 1
-    by_rarity = sorted(uniq, key=lambda t: (posts[t].df, t))
-    rare = by_rarity[0]
-    tfdl: dict[str, dict[int, tuple[int, int]]] = {rare: posts[rare].all_docs()}
-    cand = sorted(d for d in tfdl[rare] if d not in deleted)
-    for t in by_rarity[1:]:
-        if not cand:
-            return []
-        tfdl[t] = posts[t].lookup_many(cand)
-        cand = [d for d in cand if d in tfdl[t]]
-    out: list[tuple[int, float]] = []
-    for doc in cand:
-        plists = [posts[t].positions_of(doc) for t in uniq]
-        if min_span(plists) > window:
-            continue
-        dl = tfdl[rare][doc][1]
-        score = sum(
-            score_term(tfdl[t][doc][0], dl, avgdl, idfs[t]) for t in uniq
-        )
-        out.append((doc, score))
-    out.sort(key=lambda p: (-p[1], p[0]))
-    return out[:k]
+    return span_near_or_match_topk(
+        posts, [[t] for t in uniq], [idfs[t] for t in uniq], avgdl, k,
+        slop=slop, deleted=deleted,
+    )
 
 
 def span_first_match_topk(
@@ -266,22 +300,16 @@ def span_first_match_topk(
     the title-ish / lead-paragraph boost every news search uses).
 
     Every posting of the term is a candidate (no intersection to skip
-    through), but positions decode lazily per block via the shared
-    cache, and matching docs score as the ordinary single-term BM25 so
-    the SQL oracle's expression tree agrees exactly."""
+    through), but positions decode lazily per block, and matching docs
+    score as the ordinary single-term BM25 so the SQL oracle's
+    expression tree agrees exactly."""
     if term not in posts:
         return []
-    tfdl = posts[term].all_docs()
-    out: list[tuple[int, float]] = []
-    for doc in sorted(tfdl):
-        if doc in deleted:
-            continue
-        if posts[term].positions_of(doc)[0] >= end:
-            continue
-        tf, dl = tfdl[doc]
-        out.append((doc, score_term(tf, dl, avgdl, idf)))
-    out.sort(key=lambda p: (-p[1], p[0]))
-    return out[:k]
+    cand, tfdl = _intersect(posts, [[term]], deleted)
+    return _bag_topk(
+        (d for d in cand if posts[term].positions_of(d)[0] < end),
+        tfdl, [([term], idf)], avgdl, k,
+    )
 
 
 def span_not_match_topk(
@@ -301,40 +329,33 @@ def span_not_match_topk(
     ("mortgage but not near reverse", the classic negation-by-proximity).
 
     Candidates are the include term's postings; the exclude term's
-    postings/positions decode ONLY for candidate docs (the same
-    galloping block-skip probe the phrase kernel uses — an exclusion
-    stopword costs O(candidates), never its df). Matching docs score as
-    plain single-term BM25 of the include term."""
-    from bisect import bisect_left as _bl
-
+    postings/positions decode ONLY for candidate docs (the galloping
+    block-skip probe of :func:`_intersect` — an exclusion stopword costs
+    O(candidates), never its df). Matching docs score as plain
+    single-term BM25 of the include term."""
     if include not in posts:
         return []
-    tfdl = posts[include].all_docs()
-    cand = sorted(d for d in tfdl if d not in deleted)
+    cand, tfdl = _intersect(posts, [[include]], deleted)
     ex = posts.get(exclude)
     extf = ex.lookup_many(cand) if ex is not None else {}
-    out: list[tuple[int, float]] = []
-    for doc in cand:
-        if doc in extf:
-            apos = posts[include].positions_of(doc)
-            bpos = ex.positions_of(doc)
-            ok = False
-            for a in apos:
-                i = _bl(bpos, a)
-                near = min(
-                    abs(bpos[m] - a)
-                    for m in (i - 1, i)
-                    if 0 <= m < len(bpos)
-                )
-                if near > dist:
-                    ok = True
-                    break
-            if not ok:
-                continue
-        tf, dl = tfdl[doc]
-        out.append((doc, score_term(tf, dl, avgdl, idf)))
-    out.sort(key=lambda p: (-p[1], p[0]))
-    return out[:k]
+
+    def far(doc: int) -> bool:
+        if doc not in extf:
+            return True
+        apos = posts[include].positions_of(doc)
+        bpos = ex.positions_of(doc)
+        for a in apos:
+            i = bisect_left(bpos, a)
+            near = min(
+                abs(bpos[m] - a) for m in (i - 1, i) if 0 <= m < len(bpos)
+            )
+            if near > dist:
+                return True
+        return False
+
+    return _bag_topk(
+        (d for d in cand if far(d)), tfdl, [([include], idf)], avgdl, k
+    )
 
 
 def span_near_or_match_topk(
@@ -354,77 +375,21 @@ def span_near_or_match_topk(
     ``slop + n_groups - 1``. The "(fast|slow) NEAR merge" query no flat
     span shape can express.
 
-    Candidate generation intersects rarest-GROUP-first (group df = sum
-    of member dfs; a group's postings are the union of its members'),
-    with the same galloping block-skipping per member and lazy position
-    decode for survivors only. Group positions are the merged union of
-    member positions — exactly Lucene's SpanOr disjunction. Scoring
-    follows the SynonymQuery discipline shared with bm25_synonyms: per
-    group, tf SUMS over members and the idf is the blend (min member
-    idf == idf of the max member df), so alternatives share one scoring
-    slot instead of double-counting."""
-    present: list[list[str]] = []
-    for g in groups:
-        mem = [t for t in sorted(set(g)) if t in posts]
-        if not mem:
-            return []
-        present.append(mem)
-    n = len(present)
-    window = slop + n - 1
-    order = sorted(
-        range(n),
-        key=lambda i: (sum(posts[t].df for t in present[i]), i),
-    )
-    mem_docs: list[dict[str, dict[int, tuple[int, int]]]] = [
-        {} for _ in range(n)
-    ]
-    gi0 = order[0]
-    for t in present[gi0]:
-        mem_docs[gi0][t] = posts[t].all_docs()
-    cand = sorted(
-        {
-            d
-            for m in mem_docs[gi0].values()
-            for d in m
-            if d not in deleted
-        }
-    )
-    for gi in order[1:]:
-        if not cand:
-            return []
-        found: set[int] = set()
-        for t in present[gi]:
-            got = posts[t].lookup_many(cand)
-            mem_docs[gi][t] = got
-            found.update(got)
-        cand = [d for d in cand if d in found]
-    out: list[tuple[int, float]] = []
-    for doc in cand:
-        plists = []
-        for gi in range(n):
-            ps = sorted(
-                {
-                    p
-                    for t, m in mem_docs[gi].items()
-                    if doc in m
-                    for p in posts[t].positions_of(doc)
-                }
-            )
-            plists.append(ps)
-        if min_span(plists) > window:
-            continue
-        dl = next(
-            m[doc][1] for m in mem_docs[gi0].values() if doc in m
-        )
-        score = 0.0
-        for gi in range(n):
-            tf = sum(
-                m[doc][0] for m in mem_docs[gi].values() if doc in m
-            )
-            score += score_term(tf, dl, avgdl, gidfs[gi])
-        out.append((doc, score))
-    out.sort(key=lambda p: (-p[1], p[0]))
-    return out[:k]
+    The groups are :func:`_intersect`'s groups, so candidates come
+    rarest-GROUP-first (group df = sum of member dfs). Group positions
+    are the merged union of member positions — exactly Lucene's SpanOr
+    disjunction. Scoring follows the SynonymQuery discipline shared with
+    bm25_synonyms: per group, tf SUMS over members and the idf is the
+    blend (min member idf == idf of the max member df), so alternatives
+    share one scoring slot instead of double-counting."""
+    present = [[t for t in sorted(set(g)) if t in posts] for g in groups]
+    if not present or not all(present):
+        return []
+    window = slop + len(present) - 1
+    cand, tfdl = _intersect(posts, present, deleted)
+    slots = [_slot(posts, tfdl, g) for g in present]
+    ok = (d for d in cand if min_span([s(d) for s in slots]) <= window)
+    return _bag_topk(ok, tfdl, list(zip(present, gidfs)), avgdl, k)
 
 
 def ordered_chain_width(plists: list[list[int]]) -> int | None:
@@ -479,39 +444,26 @@ def intervals_ordered_match_topk(
     :func:`span_near_match_topk` (any-order window); ``max_gaps=0`` is
     an exact ordered run == phrase slop 0 over distinct terms.
 
-    Same two-stage scale shape as the phrase kernel: rarest-first doc-id
-    intersection with block skipping, lazy position decode for survivors
-    only, then the O(total positions) ordered-chain sweep. Matching docs
-    score as a plain BM25 bag over the unique terms (the span-family
-    discipline, so the SQL oracle agrees exactly)."""
+    The predicate is the O(total positions) ordered-chain sweep on top
+    of :func:`_intersect`. Matching docs score as a plain BM25 bag over
+    the unique terms (the span-family discipline, so the SQL oracle
+    agrees exactly)."""
     if not terms:
         return []
     uniq = sorted(set(terms))
     if any(t not in posts for t in uniq):
         return []
     window = max_gaps + len(terms) - 1
-    by_rarity = sorted(uniq, key=lambda t: (posts[t].df, t))
-    rare = by_rarity[0]
-    tfdl: dict[str, dict[int, tuple[int, int]]] = {rare: posts[rare].all_docs()}
-    cand = sorted(d for d in tfdl[rare] if d not in deleted)
-    for t in by_rarity[1:]:
-        if not cand:
-            return []
-        tfdl[t] = posts[t].lookup_many(cand)
-        cand = [d for d in cand if d in tfdl[t]]
-    out: list[tuple[int, float]] = []
-    for doc in cand:
-        plists = [posts[t].positions_of(doc) for t in terms]
-        width = ordered_chain_width(plists)
-        if width is None or width > window:
-            continue
-        dl = tfdl[rare][doc][1]
-        score = sum(
-            score_term(tfdl[t][doc][0], dl, avgdl, idfs[t]) for t in uniq
-        )
-        out.append((doc, score))
-    out.sort(key=lambda p: (-p[1], p[0]))
-    return out[:k]
+
+    def fits(doc: int) -> bool:
+        width = ordered_chain_width([posts[t].positions_of(doc) for t in terms])
+        return width is not None and width <= window
+
+    cand, tfdl = _intersect(posts, [[t] for t in uniq], deleted)
+    return _bag_topk(
+        (d for d in cand if fits(d)),
+        tfdl, [([t], idfs[t]) for t in uniq], avgdl, k,
+    )
 
 
 def phrase_prefix_match_topk(
@@ -547,60 +499,13 @@ def phrase_prefix_match_topk(
     members = [t for t in sorted(set(last_group)) if t in posts]
     if not members:
         return []
-    # 1. doc-id intersection: rarest fixed term first, then the group
-    by_rarity = sorted(uniq, key=lambda t: (posts[t].df, t))
-    rare = by_rarity[0]
-    tfdl: dict[str, dict[int, tuple[int, int]]] = {rare: posts[rare].all_docs()}
-    cand = sorted(d for d in tfdl[rare] if d not in deleted)
-    for t in by_rarity[1:]:
-        if not cand:
-            return []
-        tfdl[t] = posts[t].lookup_many(cand)
-        cand = [d for d in cand if d in tfdl[t]]
-    if not cand:
-        return []
-    mem_tf: dict[str, dict[int, tuple[int, int]]] = {}
-    found: set[int] = set()
-    for t in members:
-        got = posts[t].lookup_many(cand)
-        mem_tf[t] = got
-        found.update(got)
-    cand = [d for d in cand if d in found]
-    # 2. positional chain, lazy per surviving candidate
-    out: list[tuple[int, float]] = []
-    for doc in cand:
-        live = set(posts[fixed[0]].positions_of(doc))
-        ok = bool(live)
-        for t in fixed[1:]:
-            live = {
-                q
-                for q in posts[t].positions_of(doc)
-                if any(q - d in live for d in range(1, slop + 2))
-            }
-            if not live:
-                ok = False
-                break
-        if ok:
-            last_ps = {
-                p
-                for t in members
-                if doc in mem_tf[t]
-                for p in posts[t].positions_of(doc)
-            }
-            ok = any(
-                q - d in live for q in last_ps for d in range(1, slop + 2)
-            )
-        if not ok:
-            continue
-        dl = tfdl[rare][doc][1]
-        score = sum(
-            score_term(tfdl[t][doc][0], dl, avgdl, idfs[t]) for t in uniq
-        )
-        gtf = sum(m[doc][0] for m in mem_tf.values() if doc in m)
-        score += score_term(gtf, dl, avgdl, group_idf)
-        out.append((doc, score))
-    out.sort(key=lambda p: (-p[1], p[0]))
-    return out[:k]
+    cand, tfdl = _intersect(posts, [[t] for t in uniq] + [members], deleted)
+    chain = [posts[t].positions_of for t in fixed] + [_slot(posts, tfdl, members)]
+    return _bag_topk(
+        (d for d in cand if _phrase_run(chain, d, slop)),
+        tfdl, [([t], idfs[t]) for t in uniq] + [(members, group_idf)],
+        avgdl, k,
+    )
 
 
 def span_containing_match_topk(
@@ -624,49 +529,32 @@ def span_containing_match_topk(
     ``score_terms=big`` is span_containing, ``[little]`` span_within;
     the other side is a pure filter), so one kernel carries both.
 
-    Candidates intersect rarest-first over big+little with the shared
-    block-skipping machinery; positions decode lazily for survivors.
-    The span check enumerates one-position-per-big-term combinations
-    (product of per-doc tfs — tf is single digits for non-stopword
-    query terms, so the combo count is tiny) with early exit on the
-    first valid covering span; the little lookup is a bisect."""
-    from itertools import product
-
+    Candidates are :func:`_intersect` over big+little. The span check
+    enumerates one-position-per-big-term combinations (product of
+    per-doc tfs — tf is single digits for non-stopword query terms, so
+    the combo count is tiny) with early exit on the first valid covering
+    span; the little lookup is a bisect."""
     uniq_big = sorted(set(big))
     need = sorted(set(uniq_big + [little]))
     if any(t not in posts for t in need):
         return []
     window = slop + len(uniq_big) - 1
     score_over = sorted(set(score_terms if score_terms else uniq_big))
-    by_rarity = sorted(need, key=lambda t: (posts[t].df, t))
-    rare = by_rarity[0]
-    tfdl: dict[str, dict[int, tuple[int, int]]] = {rare: posts[rare].all_docs()}
-    cand = sorted(d for d in tfdl[rare] if d not in deleted)
-    for t in by_rarity[1:]:
-        if not cand:
-            return []
-        tfdl[t] = posts[t].lookup_many(cand)
-        cand = [d for d in cand if d in tfdl[t]]
-    out: list[tuple[int, float]] = []
-    for doc in cand:
+
+    def contains(doc: int) -> bool:
         plists = [posts[t].positions_of(doc) for t in uniq_big]
         cpos = posts[little].positions_of(doc)
-        hit = False
         for combo in product(*plists):
             s, e = min(combo), max(combo)
             if e - s > window:
                 continue
             i = bisect_left(cpos, s)
             if i < len(cpos) and cpos[i] <= e:
-                hit = True
-                break
-        if not hit:
-            continue
-        dl = tfdl[rare][doc][1]
-        score = sum(
-            score_term(tfdl[t][doc][0], dl, avgdl, idfs[t])
-            for t in score_over
-        )
-        out.append((doc, score))
-    out.sort(key=lambda p: (-p[1], p[0]))
-    return out[:k]
+                return True
+        return False
+
+    cand, tfdl = _intersect(posts, [[t] for t in need], deleted)
+    return _bag_topk(
+        (d for d in cand if contains(d)),
+        tfdl, [([t], idfs[t]) for t in score_over], avgdl, k,
+    )

@@ -104,6 +104,27 @@ def _bm25_weight(b: float = 0.75) -> Column:
     return idf * tfn
 
 
+def _varbyte_gaps() -> tuple[Column, Column]:
+    """``(gaps, vbytes)`` over a sorted ``ids`` array column: the d-gaps
+    (first id + 1, then successive differences) and, over a column
+    aliased ``gaps``, their summed varbyte length (7 payload bits per
+    byte). A function, not module constants: ``F.expr`` needs an active
+    session."""
+    gaps = F.expr(
+        """transform(ids, (x, i) ->
+             IF(i = 0, x + 1, x - element_at(ids, i)))"""
+    )
+    vbytes = F.expr(
+        """aggregate(gaps, 0L, (acc, g) -> acc +
+             CASE WHEN g < 128 THEN 1
+                  WHEN g < 16384 THEN 2
+                  WHEN g < 2097152 THEN 3
+                  WHEN g < 268435456 THEN 4
+                  ELSE 5 END)"""
+    )
+    return gaps, vbytes
+
+
 def lang_id(spark: SparkSession, t) -> DataFrame:
     """Marker-word-ratio language ID: en vs de vs unknown."""
     d = _tok(t["documents"])
@@ -2760,18 +2781,7 @@ def postings_size_estimate(spark: SparkSession, t) -> DataFrame:
     per_term = post.groupBy("term").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    gaps = F.expr(
-        """transform(ids, (x, i) ->
-             IF(i = 0, x + 1, x - element_at(ids, i)))"""
-    )
-    vbytes = F.expr(
-        """aggregate(gaps, 0L, (acc, g) -> acc +
-             CASE WHEN g < 128 THEN 1
-                  WHEN g < 16384 THEN 2
-                  WHEN g < 2097152 THEN 3
-                  WHEN g < 268435456 THEN 4
-                  ELSE 5 END)"""
-    )
+    gaps, vbytes = _varbyte_gaps()
     return (
         per_term.select("term", F.size("ids").cast("long").alias("df"), gaps.alias("gaps"))
         .select(
@@ -2966,18 +2976,7 @@ def docid_remap_gap_bytes(spark: SparkSession, t) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
         .join(F.broadcast(remap), "doc_id")
     )
-    gaps = F.expr(
-        """transform(ids, (x, i) ->
-             IF(i = 0, x + 1, x - element_at(ids, i)))"""
-    )
-    vbytes = F.expr(
-        """aggregate(gaps, 0L, (acc, g) -> acc +
-             CASE WHEN g < 128 THEN 1
-                  WHEN g < 16384 THEN 2
-                  WHEN g < 2097152 THEN 3
-                  WHEN g < 268435456 THEN 4
-                  ELSE 5 END)"""
-    )
+    gaps, vbytes = _varbyte_gaps()
 
     def total(ids_col: str, alias: str) -> DataFrame:
         return (
@@ -4541,18 +4540,7 @@ def elias_fano_audit(spark: SparkSession, t) -> DataFrame:
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .crossJoin(F.broadcast(u))
     )
-    gaps = F.expr(
-        """transform(ids, (x, i) ->
-             IF(i = 0, x + 1, x - element_at(ids, i)))"""
-    )
-    vbytes = F.expr(
-        """aggregate(gaps, 0L, (acc, g) -> acc +
-             CASE WHEN g < 128 THEN 1
-                  WHEN g < 16384 THEN 2
-                  WHEN g < 2097152 THEN 3
-                  WHEN g < 268435456 THEN 4
-                  ELSE 5 END)"""
-    )
+    gaps, vbytes = _varbyte_gaps()
     sized = (
         per_term.select(
             "term",
@@ -6365,18 +6353,7 @@ def pfor_audit(spark: SparkSession, t) -> DataFrame:
     per_term = post.groupBy("term").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    gaps = F.expr(
-        """transform(ids, (x, i) ->
-             IF(i = 0, x + 1, x - element_at(ids, i)))"""
-    )
-    vbytes = F.expr(
-        """aggregate(gaps, 0L, (acc, g) -> acc +
-             CASE WHEN g < 128 THEN 1
-                  WHEN g < 16384 THEN 2
-                  WHEN g < 2097152 THEN 3
-                  WHEN g < 268435456 THEN 4
-                  ELSE 5 END)"""
-    )
+    gaps, vbytes = _varbyte_gaps()
     sized = (
         per_term.select(
             "term", F.size("ids").cast("long").alias("df"),
@@ -7583,18 +7560,7 @@ def hybrid_codec_assignment(spark: SparkSession, t) -> DataFrame:
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .crossJoin(F.broadcast(u))
     )
-    gaps = F.expr(
-        """transform(ids, (x, i) ->
-             IF(i = 0, x + 1, x - element_at(ids, i)))"""
-    )
-    vbytes = F.expr(
-        """aggregate(gaps, 0L, (acc, g) -> acc +
-             CASE WHEN g < 128 THEN 1
-                  WHEN g < 16384 THEN 2
-                  WHEN g < 2097152 THEN 3
-                  WHEN g < 268435456 THEN 4
-                  ELSE 5 END)"""
-    )
+    gaps, vbytes = _varbyte_gaps()
     sized = (
         per_term.select(
             "term",
@@ -7702,18 +7668,7 @@ def blockmax_metadata_overhead(
     per_term = post.groupBy("term").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    gaps = F.expr(
-        """transform(ids, (x, i) ->
-             IF(i = 0, x + 1, x - element_at(ids, i)))"""
-    )
-    vbytes = F.expr(
-        """aggregate(gaps, 0L, (acc, g) -> acc +
-             CASE WHEN g < 128 THEN 1
-                  WHEN g < 16384 THEN 2
-                  WHEN g < 2097152 THEN 3
-                  WHEN g < 268435456 THEN 4
-                  ELSE 5 END)"""
-    )
+    gaps, vbytes = _varbyte_gaps()
     sized = per_term.select(
         "term",
         F.expr(
