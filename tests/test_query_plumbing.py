@@ -1,12 +1,17 @@
-"""Shared per-shard query plumbing: Spark jobs per hot call, the plan of a
-hot call, and a term that has segment rows but no term_stats row.
+"""Shared per-shard query plumbing: Spark jobs and JVM round trips per hot
+call, the plan of a hot call, query terms that a SQL literal would have
+to quote, and a term that has segment rows but no term_stats row.
 
 * A hot WAND or phrase call on a cached handle is one Spark job, on a
   never-updated index and on one with tombstones: idf rides the cached
   segment rows and the tombstones are cached partitioned by shard like
   them, so the call needs no idf collect, no tombstone read and no
   exchange. A change to the per-shard primitive that adds an exchange or
-  a helper job shows up here.
+  a helper job shows up here, and so does one that adds py4j round trips
+  to authoring a hot call or moves the kernel off the Arrow nodes.
+* Terms with quotes, backslashes, ``%``, non-ASCII text or an
+  injection-shaped body answer exactly as the oracles do, and the term
+  filter is still pushed into the cached and the parquet scan.
 * A segment term without a stats row is "absent" on every path and with
   or without the cache: the batch and boosted kernels answer as if the
   term were not queried, and a phrase with it matches nothing.
@@ -16,12 +21,16 @@ hot call, and a term that has segment rows but no term_stats row.
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 import pytest
+from pyspark.sql import functions as F
 
+from unichem2index_spark.functions.bm25 import Bm25Oracle
 from unichem2index_spark.functions.tokenize import tokenize
 from unichem2index_spark.operators import query as Q
+from unichem2index_spark.operators.build import build_index
 from unichem2index_spark.operators.ingest import build_index_from_webtext
 from unichem2index_spark.operators.update import delete_by_query
 from unichem2index_spark.schemas import WEBTEXT_SCHEMA
@@ -53,11 +62,31 @@ def count_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def exchanges_below_python_node(df) -> list[str]:
-    """Collect ``df``, then list the exchange nodes of its executed plan
-    that sit below a per-shard Python node (FlatMap[Co]GroupsInPandas).
-    A cached frame's own plan is not a child of its scan, so the exchange
-    that built the cache is not counted."""
+def count_py4j(spark, fn) -> int:
+    """py4j commands this thread sends while ``fn`` runs: its JVM round
+    trips. Releases of Python-side handles ("m" commands) are left out:
+    they follow the garbage collector, not the code under test."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, sent = client.send_command, threading.get_ident(), []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me and not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        fn()
+    finally:
+        del client.send_command  # the class's method again
+    return len(sent)
+
+
+def python_nodes_and_exchanges(df) -> tuple[list[str], list[str]]:
+    """Collect ``df``, then list the per-shard Python nodes of its
+    executed plan (FlatMap[Co]GroupsIn{Arrow,Pandas}) and the exchange
+    nodes that sit below one. A cached frame's own plan is not a child of
+    its scan, so the exchange that built the cache is not counted."""
     df.collect()
     found, python_nodes = [], []
 
@@ -69,7 +98,7 @@ def exchanges_below_python_node(df) -> list[str]:
             return walk(node.plan(), below)
         if below and "Exchange" in name:
             found.append(name)
-        if "InPandas" in name:
+        if name.startswith("FlatMap") and ("InArrow" in name or "InPandas" in name):
             python_nodes.append(name)
             below = True
         children = node.children()
@@ -78,12 +107,13 @@ def exchanges_below_python_node(df) -> list[str]:
 
     walk(df._jdf.queryExecution().executedPlan(), False)
     assert python_nodes, "no per-shard Python node in the plan"
-    return found
+    return python_nodes, found
 
 
 def hot_calls(spark, index_dir: str):
-    """Job counts and below-Python exchanges of hot calls on a cached
-    handle, after one warm-up round (Python workers, cached scans)."""
+    """Job counts, authoring py4j round trips, per-shard Python nodes and
+    below-Python exchanges of hot calls on a cached handle, after one
+    warm-up round (Python workers, cached scans and projections)."""
     h = Q.IndexHandle.open(spark, index_dir, cache=True)
     frames = {
         "wand": lambda: Q.bm25_topk_wand(spark, h, *WAND),
@@ -97,11 +127,14 @@ def hot_calls(spark, index_dir: str):
             name: count_jobs(spark, lambda f=frame: f().collect())
             for name, frame in frames.items()
         }
-        exchanges = {
-            name: exchanges_below_python_node(frames[name]())
+        py4j = {
+            name: count_py4j(spark, frames[name]) for name in ("wand", "phrase")
+        }
+        plans = {
+            name: python_nodes_and_exchanges(frames[name]())
             for name in ("wand", "phrase")
         }
-        return jobs, exchanges
+        return jobs, plans, py4j
     finally:
         h.close()
 
@@ -124,11 +157,13 @@ def hot(spark, hot_index):
     return {"fresh": fresh, "tombstoned": hot_calls(spark, out)}
 
 
+# batch: the shard kernels' job and the single-partition merge's
+# (4 while the merge ran a per-query window exchange and a global sort).
 @pytest.mark.parametrize(
     "state, expected",
     [
-        ("fresh", {"wand": 1, "phrase": 1, "batch": 4}),
-        ("tombstoned", {"wand": 1, "phrase": 1, "batch": 4}),
+        ("fresh", {"wand": 1, "phrase": 1, "batch": 2}),
+        ("tombstoned", {"wand": 1, "phrase": 1, "batch": 2}),
     ],
 )
 def test_hot_call_job_counts(hot, state, expected):
@@ -137,7 +172,39 @@ def test_hot_call_job_counts(hot, state, expected):
 
 @pytest.mark.parametrize("state", ["fresh", "tombstoned"])
 def test_hot_call_plan_has_no_exchange_below_the_shard_kernel(hot, state):
-    assert hot[state][1] == {"wand": [], "phrase": []}
+    assert {name: ex for name, (_, ex) in hot[state][1].items()} == {
+        "wand": [],
+        "phrase": [],
+    }
+
+
+@pytest.mark.parametrize(
+    "state, node",
+    [
+        ("fresh", "FlatMapGroupsInArrowExec"),
+        ("tombstoned", "FlatMapCoGroupsInArrowExec"),
+    ],
+)
+def test_hot_call_kernel_runs_on_arrow_nodes(hot, state, node):
+    assert {name: nodes for name, (nodes, _) in hot[state][1].items()} == {
+        "wand": [node],
+        "phrase": [node],
+    }
+
+
+# py4j round trips to author one hot call on a cached handle. Through
+# applyInPandas, with an isin term filter and a merge of fresh Columns,
+# the same calls took 141 (WAND) and 139 (phrase) fresh, 154 and 152
+# tombstoned.
+PY4J_PER_CALL = {
+    "fresh": {"wand": 18, "phrase": 18},
+    "tombstoned": {"wand": 20, "phrase": 20},
+}
+
+
+@pytest.mark.parametrize("state", ["fresh", "tombstoned"])
+def test_hot_call_authoring_py4j_round_trips(hot, state):
+    assert hot[state][2] == PY4J_PER_CALL[state]
 
 
 def test_cached_handle_builds_each_projection_once(spark, hot_index):
@@ -219,6 +286,114 @@ def test_missing_stats_row_means_term_absent(spark, missing_stats_index, cache):
         )
         assert boosted != exp
         assert _hits(Q.phrase_topk(spark, h, phrase, k)) == []
+    finally:
+        h.close()
+
+
+# Corpus terms renamed to terms a SQL string literal would have to quote,
+# and an injection-shaped term that no doc holds.
+ODD_TERMS = {
+    "merge": "o'merge",
+    "group": "back\\slash",
+    "filter": "100%",
+    "key": "caf\u00e9",
+}
+INJECTION = "x' OR '1'='1"
+ODD_WAND = [
+    ["o'merge", "the"],
+    ["back\\slash", "100%"],
+    ["caf\u00e9"],
+    ["caf\u00e9", INJECTION, "o'merge"],
+]
+ODD_PHRASES = [
+    ["o'merge", "back\\slash"],
+    ["the", "100%"],
+    ["caf\u00e9", "the"],
+    ["o'merge", INJECTION],
+]
+
+
+@pytest.fixture(scope="module")
+def odd_terms_index(spark, tmp_path_factory):
+    """A positional index whose segment rows and term_stats hold the
+    ODD_TERMS names instead of the corpus terms, and the corpus as
+    (doc_id, tokens) under the same renaming."""
+    rows = gen_webtext(150, seed=3)
+    texts = [(i, r["text"]) for i, r in enumerate(rows)]
+    docs = spark.createDataFrame(texts, "doc_id long, text string")
+    out = str(tmp_path_factory.mktemp("odd_terms"))
+    build_index(spark, docs, out, n_shards=2, positions=True)
+    term = F.col("term")
+    renamed = term
+    for old, new in ODD_TERMS.items():
+        renamed = F.when(term == old, F.lit(new)).otherwise(renamed)
+    store = Q.IndexHandle.open(spark, out).store
+    seg = store.stage_segments(
+        store.read(spark, "segments").withColumn("term", renamed)
+    )
+    ts = store.stage_table(
+        store.read(spark, "term_stats").withColumn("term", renamed), "term_stats"
+    )
+    mf = store.read_manifest()
+    mf.setdefault("tables", {}).update(segments=seg, term_stats=ts)
+    store.write_manifest(mf)
+    corpus = [(i, [ODD_TERMS.get(t, t) for t in tokenize(x)]) for i, x in texts]
+    return out, corpus
+
+
+def _phrase_scan(corpus, phrase, k):
+    """Brute-force exact phrase: docs holding ``phrase`` as consecutive
+    tokens, BM25 over its unique terms, (score desc, doc_id asc)."""
+    oracle, n, uniq = Bm25Oracle(corpus), len(phrase), sorted(set(phrase))
+    hits = [
+        (d, round(oracle.score_doc(uniq, d), 6))
+        for d, toks in corpus
+        if any(toks[i : i + n] == phrase for i in range(len(toks) - n + 1))
+    ]
+    return sorted(hits, key=lambda p: (-p[1], p[0]))[:k]
+
+
+@pytest.mark.parametrize("cache", [False, True], ids=["uncached", "cached"])
+def test_quoted_terms_answer_as_the_oracles(spark, odd_terms_index, cache):
+    out, corpus = odd_terms_index
+    oracle = Bm25Oracle(corpus)
+    h = Q.IndexHandle.open(spark, out, cache=cache)
+    try:
+        for terms in ODD_WAND:
+            want = [(d, round(s, 6)) for d, s in oracle.topk(terms, 10)]
+            assert want and _hits(Q.bm25_topk_wand(spark, h, terms, 10)) == want
+        found = 0
+        for phrase in ODD_PHRASES:
+            want = _phrase_scan(corpus, phrase, 10)
+            assert _hits(Q.phrase_topk(spark, h, phrase, 10)) == want
+            found += len(want)
+        assert found
+        assert _hits(Q.bm25_topk_wand(spark, h, [INJECTION], 10)) == []
+    finally:
+        h.close()
+
+
+def _scan_line(df, *marks: str) -> str:
+    """The one line of ``df``'s physical plan that holds every mark."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (line,) = [ln for ln in plan.splitlines() if all(m in ln for m in marks)]
+    return line
+
+
+@pytest.mark.parametrize("cache", [False, True], ids=["uncached", "cached"])
+def test_quoted_term_filter_is_pushed_into_the_scan(spark, odd_terms_index, cache):
+    out, _ = odd_terms_index
+    terms = sorted(ODD_TERMS.values()) + [INJECTION]
+    h = Q.IndexHandle.open(spark, out, cache=cache)
+    try:
+        seg, _ = h._scan(spark, terms, Q._WAND_COLS)
+        if cache:
+            line = _scan_line(seg, "InMemoryTableScan")
+            assert " IN (" in line or "INSET" in line
+        else:
+            line = _scan_line(seg, "FileScan parquet", "/segments")
+            assert "PushedFilters: [In(term, [" in line
+        assert INJECTION in line and "o'merge" in line
     finally:
         h.close()
 

@@ -1,5 +1,5 @@
 """Positional query kernels with block skipping (pure Python; each runs
-per doc-shard inside ``applyInPandas``).
+per doc-shard inside ``applyInArrow``).
 
 As in Lucene, where every positional query runs on one conjunction and
 adds only its position check, each ``*_match_topk`` kernel here is its

@@ -1,5 +1,5 @@
 """Block-max WAND top-k kernel (pure Python; runs per doc-shard inside
-``applyInPandas``).
+``applyInArrow``, on cursors built from the shard's Arrow columns).
 
 This is the query half the reference delegates to Lucene (the BM25 scorer
 behind extractor/loader.go:260-261). Algorithm: WAND pivot selection with

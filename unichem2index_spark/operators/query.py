@@ -18,13 +18,18 @@ Scale notes
 from __future__ import annotations
 
 import math
+from bisect import bisect_right
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pyarrow as pa
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.udf import _wrap_function
 from pyspark.sql.window import Window
+from pyspark.util import PythonEvalType
 
 from unichem2index_spark.functions import bm25
 from unichem2index_spark.functions.phrase import (
@@ -53,14 +58,36 @@ from unichem2index_spark.schemas import TOPK_SCHEMA
 from unichem2index_spark.sources.tables import SegmentStore
 
 
+# JVM objects that hot calls reuse, built once per SparkContext: a py4j
+# handle dies with its gateway, so none outlives the session it came from.
+_JVM_CACHE: dict[str, tuple[SparkContext, object]] = {}
+
+
+def _jvm_cached(key: str, build):
+    """``build()``, once per active SparkContext."""
+    sc = SparkContext._active_spark_context
+    hit = _JVM_CACHE.get(key)
+    if hit is None or hit[0] is not sc:
+        hit = _JVM_CACHE[key] = (sc, build())
+    return hit[1]
+
+
+def _jseq(jcols: list):
+    """A Scala Seq of JVM column objects (one JVM call per element)."""
+    return SparkContext._jvm.PythonUtils.toSeq(jcols)
+
+
 def _merge_topk(scores: DataFrame, k: int) -> DataFrame:
     """Top-k of (doc_id, score) candidates by (score desc, doc_id asc),
     score rounded to 6 dp for output only — the global merge of every
-    top-k query."""
-    return (
-        scores.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("score", 6).alias("score"))
+    top-k query. Its sort and output columns are built once per session,
+    so the merge costs a hot call three JVM calls."""
+    order, out = _jvm_cached("merge_topk", lambda: (
+        _jseq([F.desc("score")._jc, F.asc("doc_id")._jc]),
+        _jseq([F.col("doc_id")._jc, F.round("score", 6).alias("score")._jc]),
+    ))
+    return DataFrame(
+        scores._jdf.sort(order).limit(k).select(out), scores.sparkSession
     )
 
 
@@ -1785,7 +1812,9 @@ class IndexHandle:
     has_positions: bool = False
     _segments_cached: DataFrame | None = None
     _deletes_cached: DataFrame | None = None
-    _projections: dict[tuple[str, ...], DataFrame] = field(default_factory=dict)
+    # per column list: the cached projection and its _shard_refs
+    _projections: dict[tuple[str, ...], tuple] = field(default_factory=dict)
+    _deletes_refs: tuple | None = None
 
     @staticmethod
     def open(
@@ -1803,8 +1832,9 @@ class IndexHandle:
         scan, idf lookup or tombstone read of its own. The cached idf and
         tombstones are those of open time too; an uncached handle reads
         term_stats anew on each call. Each kernel's column projection of
-        the cached rows is built once (:meth:`cached_projection`). Call
-        :meth:`close` to release."""
+        the cached rows, and the column references a per-shard UDF takes,
+        are built once (:meth:`cached_projection`). Call :meth:`close` to
+        release."""
         store = SegmentStore(index_dir)
         mf = store.read_manifest()
         h = IndexHandle(
@@ -1817,10 +1847,10 @@ class IndexHandle:
         )
         if cache:
             # Cache PRE-PARTITIONED by shard: every query path ends in
-            # groupBy("shard").applyInPandas (or a cogroup with the
+            # groupBy("shard").applyInArrow (or a cogroup with the
             # tombstones), and a cached HashPartitioning(shard, n) is
             # reused by that grouping — the per-request plan becomes ONE
-            # exchange-free stage (TakeOrdered <- FlatMapGroupsInPandas
+            # exchange-free stage (TakeOrdered <- FlatMapGroupsInArrow
             # <- Sort(local) <- Filter <- InMemoryTableScan). Without it
             # every query pays a shuffle that AQE's bytes-based
             # coalescing then collapses to a SINGLE partition (the
@@ -1833,6 +1863,7 @@ class IndexHandle:
             if dele is not None:
                 h._deletes_cached = dele.persist()
                 h._deletes_cached.count()
+                h._deletes_refs = _shard_refs(dele, ["shard", "doc_id"])
         return h
 
     def close(self) -> None:
@@ -1840,6 +1871,7 @@ class IndexHandle:
             if df is not None:
                 df.unpersist()
         self._segments_cached = self._deletes_cached = None
+        self._deletes_refs = None
         self._projections.clear()
 
     @property
@@ -1890,11 +1922,28 @@ class IndexHandle:
         column list for the handle's life: a hot call filters it by term
         instead of building and analysing a fresh projection. Same
         physical plan as ``segments().where(...).select(*cols)``."""
+        return self._projection(cols)[0]
+
+    def _projection(self, cols: list[str]) -> tuple:
+        """:meth:`cached_projection` and its :func:`_shard_refs`."""
         key = tuple(cols)
-        proj = self._projections.get(key)
-        if proj is None:
-            proj = self._projections[key] = self._segments_cached.select(*cols)
-        return proj
+        hit = self._projections.get(key)
+        if hit is None:
+            proj = self._segments_cached.select(*cols)
+            hit = self._projections[key] = (proj, _shard_refs(proj, cols))
+        return hit
+
+    def _scan(self, spark: SparkSession, terms, cols: list[str]) -> tuple:
+        """The segment rows of ``terms`` (with their ``idf``) pruned to
+        ``cols``, and their :func:`_shard_refs`; on a cached handle the
+        projection and its references are built once, so the term filter
+        is the scan's only JVM call."""
+        if self._segments_cached is None:
+            frame = self.segments(spark).select(*cols)
+            refs = _shard_refs(frame, cols)
+        else:
+            frame, refs = self._projection(cols)
+        return frame.where(_term_in(terms)), refs
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
         return self.store.read(spark, "term_stats")
@@ -1959,58 +2008,115 @@ class IndexHandle:
     def per_shard(
         self,
         spark: SparkSession,
-        seg: DataFrame,
+        terms,
+        cols: list[str],
         kernel,
         schema: T.StructType,
         side: DataFrame | None = None,
     ) -> DataFrame:
-        """The per-shard execution path of every index-backed query:
-        ``seg`` (term-pruned segment rows) grouped by shard, ``kernel``
-        run once per shard, its rows (tuples in ``schema`` order) out.
+        """The per-shard execution path of every index-backed query: the
+        segment rows of ``terms`` (with their ``idf``) pruned to ``cols``,
+        grouped by shard, ``kernel`` run once per shard on a
+        ``pyarrow.Table`` of the shard's rows, its rows (tuples in
+        ``schema`` order) out.
 
-        ``kernel(pdf, deleted)`` gets the shard's segment rows and its
-        tombstone frozenset — cogrouped per shard (the doc-sharded
-        live-docs bitmap analog), so the delete set never reaches the
-        driver or a UDF closure. With ``side`` (a (shard, doc_id, ...)
-        frame that folds the tombstones in itself) the kernel gets the
-        shard's rows of that frame instead."""
-        cols = schema.fieldNames()
+        ``kernel(tbl, deleted)`` gets the shard's rows and its tombstone
+        frozenset — cogrouped per shard (the doc-sharded live-docs bitmap
+        analog), so the delete set never reaches the driver or a UDF
+        closure. With ``side`` (a (shard, doc_id, ...) frame that folds
+        the tombstones in itself) the kernel gets the shard's rows of that
+        frame, as a second table, instead.
 
-        def run(pdf: pd.DataFrame, ids) -> pd.DataFrame:
-            # a cogrouped shard can have side rows but no query terms
-            rows = kernel(pdf, ids) if len(pdf) else ()
-            return pd.DataFrame(list(rows), columns=cols)
-
-        if side is not None:
-            fn = run
-        else:
+        The plan is ``groupBy("shard").applyInArrow`` (a cogroup with the
+        tombstones or ``side``), built from column references the handle
+        holds: a hot call authors it in a few JVM calls, and the worker
+        hands the kernel Arrow columns with no pandas conversion at
+        either end."""
+        seg, (by_shard, args) = self._scan(spark, terms, cols)
+        out = to_arrow_schema(schema)
+        if side is None:
             side = self._tombstones(spark)
             if side is None:
                 # Never-updated index: skip the cogroup's extra (empty)
                 # grouped side — per-query latency, the serving hot path.
-                return seg.groupBy("shard").applyInPandas(
-                    lambda pdf: run(pdf, frozenset()), schema
-                )
+                def grouped(tbl):
+                    return _arrow_rows(kernel(tbl, frozenset()), out)
 
-            def fn(pdf: pd.DataFrame, dele_pdf: pd.DataFrame) -> pd.DataFrame:
-                return run(pdf, frozenset(int(x) for x in dele_pdf["doc_id"]))
+                udf = _arrow_udf(grouped, schema, _GROUPED_ARROW, args)
+                jdf = seg._jdf.groupBy(by_shard).flatMapGroupsInArrow(udf)
+                return DataFrame(jdf, spark)
+            side_by, side_args = (
+                self._deletes_refs
+                if side is self._deletes_cached
+                else _shard_refs(side, ["shard", "doc_id"])
+            )
 
-        return (
-            seg.groupBy("shard")
-            .cogroup(side.groupBy("shard"))
-            .applyInPandas(fn, schema)
+            def cogrouped(tbl, dele):
+                ids = frozenset(dele.column("doc_id").to_pylist())
+                return _arrow_rows(kernel(tbl, ids) if tbl.num_rows else (), out)
+
+        else:
+            side_by, side_args = _shard_refs(side, side.columns)
+
+            def cogrouped(tbl, side_tbl):
+                # a cogrouped shard can have side rows but no query terms
+                rows = kernel(tbl, side_tbl) if tbl.num_rows else ()
+                return _arrow_rows(rows, out)
+
+        udf = _arrow_udf(
+            cogrouped, schema, _COGROUPED_ARROW, args.concat(side_args)
         )
+        jdf = seg._jdf.groupBy(by_shard).flatMapCoGroupsInArrow(
+            side._jdf.groupBy(side_by), udf
+        )
+        return DataFrame(jdf, spark)
 
 
-def _segment_scan(
-    spark: SparkSession, index: IndexHandle, terms, cols: list[str]
-) -> DataFrame:
-    """The query terms' segment rows (with their ``idf``), pruned to the
-    kernel's columns; a cached handle's projection is built once."""
-    in_terms = F.col("term").isin(list(terms))
-    if index._segments_cached is not None:
-        return index.cached_projection(cols).where(in_terms)
-    return index.segments(spark).where(in_terms).select(*cols)
+_GROUPED_ARROW = PythonEvalType.SQL_GROUPED_MAP_ARROW_UDF
+_COGROUPED_ARROW = PythonEvalType.SQL_COGROUPED_MAP_ARROW_UDF
+
+
+def _shard_refs(df: DataFrame, cols: list[str]) -> tuple:
+    """Scala Seqs of references to ``df``'s ``shard`` column and to its
+    columns ``cols``: the grouping key and the arguments of a per-shard
+    UDF over ``df`` or over a filter of it."""
+    jdf = df._jdf
+    return _jseq([jdf.apply("shard")]), _jseq([jdf.apply(c) for c in cols])
+
+
+def _arrow_udf(fn, schema: T.StructType, eval_type: int, args):
+    """The JVM column of a grouped (or cogrouped) Arrow UDF ``fn`` over
+    the column references ``args``: what ``applyInArrow`` builds, without
+    looking every column up by name and with the JVM UDF class and the
+    parsed return type held per session."""
+    sc = SparkContext._active_spark_context
+    make, jdt = _jvm_cached("arrow_udf:" + schema.json(), lambda: (
+        getattr(sc._jvm, "org.apache.spark.sql.execution.python.UserDefinedPythonFunction"),
+        sc._jvm.org.apache.spark.sql.types.DataType.fromJson(schema.json()),
+    ))
+    func = _wrap_function(sc, fn, schema)
+    return make("per_shard", func, jdt, eval_type, True).apply(args)
+
+
+def _arrow_rows(rows, schema: pa.Schema) -> pa.Table:
+    """A kernel's row tuples as a table of ``schema``."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
+def _term_in(terms) -> str:
+    """``term IN (...)`` as one SQL string, so the filter is one JVM call
+    whatever the number of terms. Each term is its UTF-8 bytes as a hex
+    literal cast to string: no term text reaches the SQL parser, so no
+    quote, backslash or injection-shaped term can change the parse.
+    Constant folding turns the casts back into string literals, so the
+    filter is still the In/InSet the cached scan and parquet prune by."""
+    if not terms:
+        return "false"
+    lits = (f"CAST(X'{t.encode().hex()}' AS STRING)" for t in terms)
+    return f"term IN ({', '.join(lits)})"
 
 
 def _collect_idfs(
@@ -2035,11 +2141,35 @@ def _collect_idfs(
     return {r.term: float(r.idf) for r in ts}
 
 
-def _shard_idfs(pdf: pd.DataFrame) -> dict[str, float]:
-    """idf per term of a shard's segment rows; a null idf (no term_stats
-    row) leaves the term out: absent, never a lookup error."""
-    ts = pdf[["term", "idf"]].dropna().drop_duplicates("term")
-    return {str(t): float(v) for t, v in zip(ts["term"], ts["idf"])}
+# A shard's grouping and sort columns: no kernel reads them per term.
+_SORT_KEYS = ("shard", "term", "gen", "block_id")
+
+
+def _term_rows(tbl: pa.Table) -> dict[str, dict[str, list]]:
+    """A shard's segment rows by term, in term order: each term's columns
+    as Python lists, rows in (gen, block_id) order. One Arrow sort, one
+    ``to_pylist`` per column, then list slices per term: no pandas and no
+    per-cell conversion."""
+    tbl = tbl.sort_by([("term", "ascending"), ("gen", "ascending"),
+                       ("block_id", "ascending")])
+    terms = tbl.column("term").to_pylist()
+    cols = {
+        c: tbl.column(c).to_pylist()
+        for c in tbl.column_names
+        if c not in _SORT_KEYS
+    }
+    out, start = {}, 0
+    for t in sorted(set(terms)):
+        end = bisect_right(terms, t, start)
+        out[t] = {c: v[start:end] for c, v in cols.items()}
+        start = end
+    return out
+
+
+def _shard_idfs(rows: dict[str, dict[str, list]]) -> dict[str, float]:
+    """idf per term of a shard's :func:`_term_rows`; a null idf (no
+    term_stats row) leaves the term out: absent, never a lookup error."""
+    return {t: r["idf"][0] for t, r in rows.items() if r["idf"][0] is not None}
 
 
 # The WAND kernels read exactly these columns; pruning them out of the
@@ -2052,56 +2182,35 @@ _WAND_COLS = [
 ]
 
 
-def _cursors_from_group(
-    grp: pd.DataFrame,
-    term: str,
-    idf_t: float,
-    avgdl: float,
-    use_stored_bounds: bool,
-) -> TermBlocks:
-    grp = grp.sort_values(["gen", "block_id"])
-    if use_stored_bounds:
-        bounds = [float(x) for x in grp["block_max_score"]]
-    else:
-        bounds = [
-            bm25.max_score_bound(int(mt), int(md), avgdl, idf_t)
-            for mt, md in zip(grp["block_max_tf"], grp["block_min_dl"])
-        ]
-    return TermBlocks(
-        term=term,
-        idf=idf_t,
-        max_doc_ids=[int(x) for x in grp["max_doc_id"]],
-        block_max_scores=bounds,
-        enc_blocks=list(
-            zip(
-                (bytes(b) for b in grp["doc_gaps"]),
-                (bytes(b) for b in grp["tfs"]),
-                (bytes(b) for b in grp["dls"]),
-            )
-        ),
-    )
-
-
 def _term_cursors(
-    pdf: pd.DataFrame,
+    rows: dict[str, dict[str, list]],
     avgdl: float,
     use_stored_bounds: bool,
     boosts: dict[str, float] | None = None,
 ) -> dict[str, TermBlocks]:
-    """One cursor per term of a shard's segment rows, in term order, at
-    the rows' idf times the term's boost. Terms with a null idf are
-    skipped: a segment term with no term_stats row is absent from the
+    """One cursor per term of a shard's :func:`_term_rows`, in term
+    order, at the rows' idf times the term's boost. Terms with a null idf
+    are skipped: a segment term with no term_stats row is absent from the
     query, never a lookup error."""
     boosts = boosts or {}
-    idfs = _shard_idfs(pdf)
-    return {
-        str(t): _cursors_from_group(
-            g, str(t), idfs[str(t)] * float(boosts.get(str(t), 1.0)),
-            avgdl, use_stored_bounds,
+    cursors = {}
+    for t, idf in _shard_idfs(rows).items():
+        r, idf_t = rows[t], idf * float(boosts.get(t, 1.0))
+        if use_stored_bounds:
+            bounds = r["block_max_score"]
+        else:
+            bounds = [
+                bm25.max_score_bound(mt, md, avgdl, idf_t)
+                for mt, md in zip(r["block_max_tf"], r["block_min_dl"])
+            ]
+        cursors[t] = TermBlocks(
+            term=t,
+            idf=idf_t,
+            max_doc_ids=r["max_doc_id"],
+            block_max_scores=bounds,
+            enc_blocks=list(zip(r["doc_gaps"], r["tfs"], r["dls"])),
         )
-        for t, g in pdf.groupby("term", sort=True)
-        if str(t) in idfs
-    }
+    return cursors
 
 
 def _per_shard_wand(
@@ -2128,15 +2237,16 @@ def _per_shard_wand(
         use_stored_bounds = not index.multi_gen
     avgdl = index.avgdl
 
-    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        cursors = _term_cursors(pdf, avgdl, use_stored_bounds, boosts)
+    def fn(tbl, deleted: frozenset[int]):
+        cursors = _term_cursors(_term_rows(tbl), avgdl, use_stored_bounds, boosts)
         return wand_topk(
             list(cursors.values()), avgdl, depth, deleted=deleted,
             min_match=min_match, after=after,
         )
 
-    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
-    return index.per_shard(spark, seg, fn, TOPK_SCHEMA)
+    return index.per_shard(
+        spark, sorted(set(terms)), _WAND_COLS, fn, TOPK_SCHEMA
+    )
 
 
 def bm25_topk_wand(
@@ -2205,12 +2315,14 @@ def bm25_topk_maxscore(
     use_stored = not index.multi_gen
     avgdl = index.avgdl
 
-    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        cursors = _term_cursors(pdf, avgdl, use_stored)
+    def fn(tbl, deleted: frozenset[int]):
+        cursors = _term_cursors(_term_rows(tbl), avgdl, use_stored)
         return maxscore_topk(list(cursors.values()), avgdl, k, deleted=deleted)
 
-    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
-    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
+    per_shard = index.per_shard(
+        spark, sorted(set(terms)), _WAND_COLS, fn, TOPK_SCHEMA
+    )
+    return _merge_topk(per_shard, k)
 
 
 _BATCH_SCHEMA = T.StructType(
@@ -2224,12 +2336,16 @@ _BATCH_SCHEMA = T.StructType(
 
 
 def _merge_batch(per_shard: DataFrame) -> DataFrame:
-    """Per-query top-k merge of a batch's per-shard candidates: one
-    global window per query_id over <= n_shards * k rows, each query's
-    own k carried on its candidate rows."""
+    """Per-query top-k merge of a batch's per-shard candidates, each
+    query's own k carried on its candidate rows. The <= n_shards * sum(k)
+    rows move to ONE partition first (a shuffle, so the kernels upstream
+    keep one task per shard partition): a single partition already
+    satisfies the per-query window and the final sort, so neither adds
+    an exchange or a range-sampling job of its own."""
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        per_shard.withColumn("rank", F.row_number().over(w))
+        per_shard.repartition(1)
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= F.col("k"))
         .select(
             "query_id",
@@ -2254,8 +2370,8 @@ def bm25_topk_batch(
 
     Scale shape: one pass over the union of all queries' posting lists per
     shard (segments scanned once with `term IN (union of terms)`), per-shard
-    WAND per query inside a single applyInPandas stage, then one global
-    window per query_id over <= n_shards * k candidate rows.
+    WAND per query inside a single applyInArrow stage, then one
+    single-partition merge of the <= n_shards * sum(k) candidate rows.
     """
     all_terms = sorted({t for q in queries for t in q["terms"]})
     if not all_terms or not queries:
@@ -2269,22 +2385,21 @@ def bm25_topk_batch(
     avgdl = index.avgdl
     use_stored = not index.multi_gen
 
-    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        # Build each term's cursor ONCE per shard (the pandas sort +
-        # list materialization in _cursors_from_group was ~40% of the
-        # batch kernel when run per query), then hand every query a
-        # cheap rewound clone: fresh() shares the immutable block lists
+    def fn(tbl, deleted: frozenset[int]):
+        # Build each term's cursor ONCE per shard, then hand every query
+        # a cheap rewound clone: fresh() shares the immutable block lists
         # AND the decoded-block cache, so each block is varbyte-decoded
         # at most once per shard per batch instead of once per query.
-        tmpl = _term_cursors(pdf, avgdl, use_stored)
+        tmpl = _term_cursors(_term_rows(tbl), avgdl, use_stored)
         for qid, terms, k in qspec:
             # Fresh cursor state per query: wand_topk advances it.
             cursors = [tmpl[t].fresh() for t in terms if t in tmpl]
             for d, s in wand_topk(cursors, avgdl, k, deleted=deleted):
                 yield qid, d, s, k
 
-    seg = _segment_scan(spark, index, all_terms, _WAND_COLS)
-    return _merge_batch(index.per_shard(spark, seg, fn, _BATCH_SCHEMA))
+    return _merge_batch(
+        index.per_shard(spark, all_terms, _WAND_COLS, fn, _BATCH_SCHEMA)
+    )
 
 
 def bm25_topk_filtered(
@@ -2325,7 +2440,6 @@ def bm25_topk_filtered(
     Both shapes are verified identical on broad predicates in
     tests/test_phrase.py::test_bm25_filtered_mode_equivalence.
     """
-    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
     # Null predicate results never match (SQL filter semantics): the
     # bitset side drops them, so the complement side must include them.
     match_flag = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
@@ -2355,12 +2469,15 @@ def bm25_topk_filtered(
     else:
         raise ValueError(f"unknown mode {mode!r}")
 
-    def fn(pdf: pd.DataFrame, ids_pdf: pd.DataFrame):
-        ids = frozenset(int(x) for x in ids_pdf["doc_id"])
-        cursors = _term_cursors(pdf, avgdl, use_stored)
+    def fn(tbl, side_tbl):
+        ids = frozenset(side_tbl.column("doc_id").to_pylist())
+        cursors = _term_cursors(_term_rows(tbl), avgdl, use_stored)
         return wand_topk(list(cursors.values()), avgdl, k, **{id_kw: ids})
 
-    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA, side), k)
+    per_shard = index.per_shard(
+        spark, sorted(set(terms)), _WAND_COLS, fn, TOPK_SCHEMA, side
+    )
+    return _merge_topk(per_shard, k)
 
 
 def bm25_topk_field_boost_wand(
@@ -2438,24 +2555,25 @@ def _wand_mult_frame_topk(
     (doc_id, m) frame cogroups per shard like the filter bitset; docs
     absent from it (tombstones — docs() drops them) are ineligible, so
     the deletes cogroup is subsumed."""
-    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
     side = index.docs(spark).select(
         index._shard_col(), "doc_id", m_col.alias("m")
     )
     avgdl = index.avgdl
     use_stored = not index.multi_gen
 
-    def fn(pdf: pd.DataFrame, m_pdf: pd.DataFrame):
-        mult = {
-            int(d): float(m)
-            for d, m in zip(m_pdf["doc_id"], m_pdf["m"])
-        }
-        cursors = _term_cursors(pdf, avgdl, use_stored)
+    def fn(tbl, m_tbl):
+        mult = dict(
+            zip(m_tbl.column("doc_id").to_pylist(), m_tbl.column("m").to_pylist())
+        )
+        cursors = _term_cursors(_term_rows(tbl), avgdl, use_stored)
         return wand_topk(
             list(cursors.values()), avgdl, k, mult=mult, mult_bound=bound
         )
 
-    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA, side), k)
+    per_shard = index.per_shard(
+        spark, sorted(set(terms)), _WAND_COLS, fn, TOPK_SCHEMA, side
+    )
+    return _merge_topk(per_shard, k)
 
 
 def bm25_topk_random_score_wand(
@@ -2479,8 +2597,8 @@ def bm25_topk_random_score_wand(
     use_stored = not index.multi_gen
     s_int = int(seed)
 
-    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        cursors = _term_cursors(pdf, avgdl, use_stored)
+    def fn(tbl, deleted: frozenset[int]):
+        cursors = _term_cursors(_term_rows(tbl), avgdl, use_stored)
         return wand_topk(
             list(cursors.values()),
             avgdl,
@@ -2490,22 +2608,23 @@ def bm25_topk_random_score_wand(
             mult_bound=1.0,
         )
 
-    seg = _segment_scan(spark, index, sorted(set(terms)), _WAND_COLS)
-    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
+    per_shard = index.per_shard(
+        spark, sorted(set(terms)), _WAND_COLS, fn, TOPK_SCHEMA
+    )
+    return _merge_topk(per_shard, k)
 
 
 # --------------------------------------------------------------------------
 # Bool must_not, term expansion (prefix / fuzzy), pagination
 # --------------------------------------------------------------------------
-def _doc_ids_from_group(grp: pd.DataFrame) -> set[int]:
-    """All doc_ids in these segment rows (decode-only, no scores)."""
+def _doc_ids(rows: dict[str, list]) -> set[int]:
+    """All doc_ids in one term's :func:`_term_rows` (decode-only, no
+    scores)."""
     from unichem2index_spark.functions.codec import PostingBlock
 
     ids: set[int] = set()
-    for dg, tfs, dls in zip(grp["doc_gaps"], grp["tfs"], grp["dls"]):
-        ids.update(
-            PostingBlock.decode(bytes(dg), bytes(tfs), bytes(dls)).doc_ids
-        )
+    for blobs in zip(rows["doc_gaps"], rows["tfs"], rows["dls"]):
+        ids.update(PostingBlock.decode(*blobs).doc_ids)
     return ids
 
 
@@ -2539,20 +2658,23 @@ def bm25_topk_must_not(
     avgdl = index.avgdl
     use_stored = not index.multi_gen
 
-    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        excluded = deleted | _doc_ids_from_group(
-            pdf[pdf["term"].isin(excl_set)]
-        )
+    def fn(tbl, deleted: frozenset[int]):
+        rows = _term_rows(tbl)
+        excluded = set(deleted)
+        for t in excl_set & rows.keys():
+            excluded |= _doc_ids(rows[t])
         cursors = _term_cursors(
-            pdf[pdf["term"].isin(scoring)], avgdl, use_stored
+            {t: r for t, r in rows.items() if t in scoring}, avgdl, use_stored
         )
         return wand_topk(
             list(cursors.values()), avgdl, k, deleted=excluded,
             min_match=min_match,
         )
 
-    seg = _segment_scan(spark, index, sorted(set(scoring) | excl_set), _WAND_COLS)
-    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
+    per_shard = index.per_shard(
+        spark, sorted(set(scoring) | excl_set), _WAND_COLS, fn, TOPK_SCHEMA
+    )
+    return _merge_topk(per_shard, k)
 
 
 def expand_prefix(
@@ -2869,18 +2991,6 @@ _PHRASE_COLS = [
 ]
 
 
-def _pos_postings_from_group(grp: pd.DataFrame, term: str):
-    grp = grp.sort_values(["gen", "block_id"])
-    return PosTermPostings(
-        term=term,
-        max_doc_ids=[int(x) for x in grp["max_doc_id"]],
-        enc_blocks=list(
-            zip(grp["doc_gaps"], grp["tfs"], grp["dls"], grp["positions"])
-        ),
-        df=int(grp["n_docs"].sum()),
-    )
-
-
 def _require_positions(index: IndexHandle, op: str) -> None:
     if not index.has_positions:
         raise ValueError(
@@ -2889,11 +2999,19 @@ def _require_positions(index: IndexHandle, op: str) -> None:
         )
 
 
-def _shard_posts(pdf: pd.DataFrame) -> dict[str, PosTermPostings]:
-    """A shard's per-term :class:`PosTermPostings`."""
+def _shard_posts(rows: dict[str, dict[str, list]]) -> dict[str, PosTermPostings]:
+    """A shard's per-term :class:`PosTermPostings` from its
+    :func:`_term_rows`."""
     return {
-        str(t): _pos_postings_from_group(g, str(t))
-        for t, g in pdf.groupby("term", sort=True)
+        t: PosTermPostings(
+            term=t,
+            max_doc_ids=r["max_doc_id"],
+            enc_blocks=list(
+                zip(r["doc_gaps"], r["tfs"], r["dls"], r["positions"])
+            ),
+            df=sum(r["n_docs"]),
+        )
+        for t, r in rows.items()
     }
 
 
@@ -2914,14 +3032,17 @@ def _positional_topk(
     there holds every needed term."""
     need = sorted(set(need))
 
-    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        idfs = _shard_idfs(pdf)
+    def fn(tbl, deleted: frozenset[int]):
+        rows = _term_rows(tbl)
+        idfs = _shard_idfs(rows)
         if any(t not in idfs for t in need):
             return ()
-        return match(_shard_posts(pdf), idfs, deleted)
+        return match(_shard_posts(rows), idfs, deleted)
 
-    seg = _segment_scan(spark, index, scan_terms, _PHRASE_COLS)
-    return _merge_topk(index.per_shard(spark, seg, fn, TOPK_SCHEMA), k)
+    per_shard = index.per_shard(
+        spark, scan_terms, _PHRASE_COLS, fn, TOPK_SCHEMA
+    )
+    return _merge_topk(per_shard, k)
 
 
 def phrase_topk(
@@ -2947,7 +3068,7 @@ def phrase_topk(
 
     Scale shape — identical to :func:`bm25_topk_wand`: `term IN` pushed
     to the parquet scan (row-group pruning), per-shard match + local
-    top-k inside one applyInPandas stage, n_shards*k candidate rows to
+    top-k inside one applyInArrow stage, n_shards*k candidate rows to
     the global TakeOrderedAndProject. Tombstones cogroup per shard.
     Per-shard memory is bounded by the rarest term's postings (block
     skipping: candidates from the rarest term, other terms probed via
@@ -3073,8 +3194,8 @@ def phrase_topk_batch(
     Scale shape: segments scanned ONCE with `term IN (union of all
     phrases' terms)`; per shard the block-skipping kernel runs per query
     against shared :class:`PosTermPostings` cursors whose decoded-block
-    caches are reused across queries; then one global window per
-    query_id over <= n_shards * k candidate rows."""
+    caches are reused across queries; then one single-partition merge
+    of the <= n_shards * sum(k) candidate rows."""
     _require_positions(index, "phrase_topk_batch")
     all_terms = sorted({t for q in queries for t in q["phrase"]})
     if not all_terms or not queries:
@@ -3095,9 +3216,10 @@ def phrase_topk_batch(
     ]
     avgdl = index.avgdl
 
-    def fn(pdf: pd.DataFrame, deleted: frozenset[int]):
-        idfs = _shard_idfs(pdf)
-        posts = _shard_posts(pdf)
+    def fn(tbl, deleted: frozenset[int]):
+        rows = _term_rows(tbl)
+        idfs = _shard_idfs(rows)
+        posts = _shard_posts(rows)
         for qid, phrase, k, slop in qspec:
             # a term absent from the shard: no doc here holds the phrase
             if any(t not in idfs for t in phrase):
@@ -3107,8 +3229,9 @@ def phrase_topk_batch(
             ):
                 yield qid, d, s, k
 
-    seg = _segment_scan(spark, index, all_terms, _PHRASE_COLS)
-    return _merge_batch(index.per_shard(spark, seg, fn, _BATCH_SCHEMA))
+    return _merge_batch(
+        index.per_shard(spark, all_terms, _PHRASE_COLS, fn, _BATCH_SCHEMA)
+    )
 
 
 # --------------------------------------------------------------------------

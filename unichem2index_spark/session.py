@@ -92,8 +92,8 @@ def get_spark(
         # cached runs (seed 1, local[2] on a 4-core host) took 0.42-0.53 s
         # on 3 tasks at 16k and 0.44-0.48 s on 1 task at 1m (one call per
         # group: 6.7 s vs 11.5-13.8 s). It stays
-        # for the remaining per-group kernels (groupBy + applyInPandas on
-        # the query path, trainprep's pack), not re-measured.
+        # for the remaining per-group kernels (groupBy + applyInArrow on
+        # the query path, trainprep's applyInPandas pack), not re-measured.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
